@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.diffy.{BigDiffy, DiffOptions}
 import graft.sampling.{BigSampler, DirectSampler}
-import graft.sources.{AvroIO, GraftIO}
+import graft.sources.{AvroIO, GraftIO, ProtoWire}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CLI front-end multiplexing the three reference commands
@@ -27,8 +27,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Flag names mirror the reference's usage strings (BigSampler.scala:98-132,
-  * BigDiffy.scala:581-616) in kebab case. Outputs are guarded by the
-  * output-exists short circuit (S14) like the reference's samplers.
+  * BigDiffy.scala:581-616) in kebab case. Every command that writes
+  * `--output` runs through [[guarded]], the output-exists short circuit
+  * (S14) like the reference's samplers, checked before any input is read.
   */
 object Graft {
 
@@ -55,6 +56,30 @@ object Graft {
 
   private def csv(v: Option[String]): Seq[String] =
     v.map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
+
+  /** The CLI's one output guard (S14; the reference's short circuit around
+    * every sampler sink, BigSamplerAvro.scala:240-242): when `done(--output)`
+    * holds, the command is skipped BEFORE any input is read or any eager
+    * job (a model fit, a k-means collect) runs, so a re-run over a complete
+    * output needs neither its input nor a recompute. `done` defaults to the
+    * output's own `_SUCCESS` marker. */
+  private def guarded(f: Map[String, String],
+                      done: String => Boolean = GraftIO.outputExists)(
+      job: String => Unit): Unit = {
+    val out = required(f, "output")
+    if (done(out)) System.err.println(s"[graft] output $out already complete, skipping")
+    else job(out)
+  }
+
+  /** The `--input` (or `--lhs`/`--rhs`) source in `--input-mode`,
+    * narrowed by `--row-restriction`. */
+  private def input(spark: SparkSession, f: Map[String, String],
+                    flag: String = "input"): DataFrame =
+    restrict(read(spark, required(f, flag), f.getOrElse("input-mode", "parquet")), f)
+
+  /** `--output` in `--output-mode`, directory-partitioned by `--partition-by`. */
+  private def writeOutput(df: DataFrame, out: String, f: Map[String, String]): Unit =
+    write(df, out, f.getOrElse("output-mode", "parquet"), csv(f.get("partition-by")))
 
   def run(args: Seq[String], spark: SparkSession): Unit = args.headOption match {
     case Some("bigDiffy")      => bigDiffy(parseFlags(args.tail), spark)
@@ -95,16 +120,11 @@ object Graft {
     *               [--input-mode=parquet|avro|json|csv] [--columns=c1,c2]
     *               [--row-restriction=<sql predicate>]
     * }}} */
-  private def profileCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def profileCmd(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      val prof = graft.ext.Profile.profile(input(spark, f), csv(f.get("columns")))
+      write(prof.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
     }
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val prof = graft.ext.Profile.profile(df, csv(f.get("columns")))
-    write(prof.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
-  }
 
   /** Engine extension: compact (or split) a parquet layout to
     * target-sized files ([[graft.ext.Layout.compactTo]]).
@@ -113,16 +133,13 @@ object Graft {
     * graft compact --input=<dir> --output=<dir> --target-bytes=<n>
     *               [--preserve-order]
     * }}} */
-  private def compactCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def compactCmd(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      val n = graft.ext.Layout.compactTo(spark, required(f, "input"), output,
+        targetBytes = required(f, "target-bytes").toLong,
+        preserveOrder = f.get("preserve-order").contains("true"))
+      System.err.println(s"[graft] compacted to $n files")
     }
-    val n = graft.ext.Layout.compactTo(spark, required(f, "input"), output,
-      targetBytes = required(f, "target-bytes").toLong,
-      preserveOrder = f.get("preserve-order").contains("true"))
-    System.err.println(s"[graft] compacted to $n files")
-  }
 
   /** Engine extension: k-means topic clustering over an embedding column
     * ([[graft.ext.Similarity.clusterAssign]]) — writes (id, cluster)
@@ -134,25 +151,18 @@ object Graft {
     *               [--id-col=vec_id] [--vec-col=embedding] [--seed=<long>]
     *               [--input-mode=parquet|avro|json] [--row-restriction=<pred>]
     * }}} */
-  private def clusterCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def clusterCmd(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      val assigned = graft.ext.Similarity.clusterAssign(input(spark, f),
+        f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
+        k = required(f, "k").toInt,
+        seed = f.get("seed").map(_.toLong).getOrElse(42L))
+      // a zero-row partitionBy write emits no schema-bearing file and the
+      // output would fail later schema inference (same guard as the
+      // persisted indexes): degrade to an unpartitioned empty write
+      write(assigned, output, "parquet",
+        if (assigned.isEmpty) Nil else Seq("cluster"))
     }
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val assigned = graft.ext.Similarity.clusterAssign(df,
-      f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
-      k = required(f, "k").toInt,
-      seed = f.get("seed").map(_.toLong).getOrElse(42L))
-    // a zero-row partitionBy write emits no schema-bearing file and the
-    // output would fail later schema inference (same guard as the
-    // persisted indexes): degrade to an unpartitioned empty write
-    if (assigned.isEmpty)
-      assigned.write.mode("overwrite").parquet(output)
-    else
-      assigned.write.mode("overwrite").partitionBy("cluster").parquet(output)
-  }
 
   /** Engine extension: build or grow a persisted index artifact — BM25
     * term-bucketed postings ([[graft.ext.Retrieval.buildTextIndex]]), an
@@ -227,9 +237,7 @@ object Graft {
             nlist = f.get("nlist").map(_.toInt).getOrElse(16),
             maxIter = f.get("max-iter").map(_.toInt).getOrElse(10))
         case "ivfpq" =>
-          val vecs = restrict(read(spark, required(f, "input"),
-            f.getOrElse("input-mode", "parquet")), f)
-          graft.ext.Similarity.retrainIvfPqIndex(vecs,
+          graft.ext.Similarity.retrainIvfPqIndex(input(spark, f),
             f.getOrElse("id-col", "vec_id"),
             f.getOrElse("vec-col", "embedding"), output,
             nlist = f.get("nlist").map(_.toInt).getOrElse(16),
@@ -246,60 +254,58 @@ object Graft {
     val append = f.get("append").contains("true")
     // the exists-guard protects BUILDS from clobbering; an append's whole
     // point is that the target exists
-    if (!append && GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val idCol = f.getOrElse("id-col",
-      if (Set("ivf", "ivfpq")(f.getOrElse("type", ""))) "vec_id" else "doc_id")
-    required(f, "type") match {
-      case "text" =>
-        val textCol = f.getOrElse("text-col", "text")
-        val n =
-          if (append) graft.ext.Retrieval.appendTextIndex(df, idCol, textCol,
-            output, batchId = f.get("batch-id"))
-          else graft.ext.Retrieval.buildTextIndex(df, idCol, textCol, output,
-            buckets = f.get("buckets").map(_.toInt).getOrElse(64))
-        System.err.println(s"[graft] text index ${if (append) "+" else ""}$n docs at $output")
-      case "ivf" =>
-        val vecCol = f.getOrElse("vec-col", "embedding")
-        if (append) {
-          val n = graft.ext.Similarity.appendIvfIndex(df, idCol, vecCol,
-            output, batchId = f.get("batch-id"))
-          System.err.println(s"[graft] ivf index +$n vectors at $output")
-        } else {
-          val n = graft.ext.Similarity.buildIvfIndex(df, idCol, vecCol, output,
-            nlist = f.get("nlist").map(_.toInt).getOrElse(16))
-          System.err.println(s"[graft] ivf index with $n cells at $output")
-        }
-      case "ivfpq" =>
-        val vecCol = f.getOrElse("vec-col", "embedding")
-        if (append) {
-          val n = graft.ext.Similarity.appendIvfPqIndex(df, idCol, vecCol,
-            output, batchId = f.get("batch-id"))
-          System.err.println(s"[graft] ivfpq index +$n vectors at $output")
-        } else {
-          val n = graft.ext.Similarity.buildIvfPqIndex(df, idCol, vecCol, output,
-            nlist = f.get("nlist").map(_.toInt).getOrElse(16),
-            m = f.get("m").map(_.toInt).getOrElse(8),
-            codebookSize = f.get("codebook-size").map(_.toInt).getOrElse(256))
-          System.err.println(s"[graft] ivfpq index with $n cells at $output")
-        }
-      case "dedup" =>
-        val textCol = f.getOrElse("text-col", "text")
-        val n =
-          // --batch-id makes the append idempotent (a retry overwrites
-          // its own batch partition instead of double-writing)
-          if (append) graft.ext.DedupIndex.append(df, idCol, textCol, output,
-            batchId = f.get("batch-id"))
-          else graft.ext.DedupIndex.build(df, idCol, textCol, output,
-            numHashes = f.get("num-hashes").map(_.toInt).getOrElse(64),
-            bands = f.get("bands").map(_.toInt).getOrElse(16),
-            shingleLen = f.get("shingle-len").map(_.toInt).getOrElse(5))
-        System.err.println(s"[graft] dedup index ${if (append) "+" else ""}$n docs at $output")
-      case t => throw new IllegalArgumentException(
-        s"--type must be text, ivf, ivfpq or dedup, got $t")
+    guarded(f, o => !append && GraftIO.outputExists(o)) { _ =>
+      val df = input(spark, f)
+      val idCol = f.getOrElse("id-col",
+        if (Set("ivf", "ivfpq")(f.getOrElse("type", ""))) "vec_id" else "doc_id")
+      required(f, "type") match {
+        case "text" =>
+          val textCol = f.getOrElse("text-col", "text")
+          val n =
+            if (append) graft.ext.Retrieval.appendTextIndex(df, idCol, textCol,
+              output, batchId = f.get("batch-id"))
+            else graft.ext.Retrieval.buildTextIndex(df, idCol, textCol, output,
+              buckets = f.get("buckets").map(_.toInt).getOrElse(64))
+          System.err.println(s"[graft] text index ${if (append) "+" else ""}$n docs at $output")
+        case "ivf" =>
+          val vecCol = f.getOrElse("vec-col", "embedding")
+          if (append) {
+            val n = graft.ext.Similarity.appendIvfIndex(df, idCol, vecCol,
+              output, batchId = f.get("batch-id"))
+            System.err.println(s"[graft] ivf index +$n vectors at $output")
+          } else {
+            val n = graft.ext.Similarity.buildIvfIndex(df, idCol, vecCol, output,
+              nlist = f.get("nlist").map(_.toInt).getOrElse(16))
+            System.err.println(s"[graft] ivf index with $n cells at $output")
+          }
+        case "ivfpq" =>
+          val vecCol = f.getOrElse("vec-col", "embedding")
+          if (append) {
+            val n = graft.ext.Similarity.appendIvfPqIndex(df, idCol, vecCol,
+              output, batchId = f.get("batch-id"))
+            System.err.println(s"[graft] ivfpq index +$n vectors at $output")
+          } else {
+            val n = graft.ext.Similarity.buildIvfPqIndex(df, idCol, vecCol, output,
+              nlist = f.get("nlist").map(_.toInt).getOrElse(16),
+              m = f.get("m").map(_.toInt).getOrElse(8),
+              codebookSize = f.get("codebook-size").map(_.toInt).getOrElse(256))
+            System.err.println(s"[graft] ivfpq index with $n cells at $output")
+          }
+        case "dedup" =>
+          val textCol = f.getOrElse("text-col", "text")
+          val n =
+            // --batch-id makes the append idempotent (a retry overwrites
+            // its own batch partition instead of double-writing)
+            if (append) graft.ext.DedupIndex.append(df, idCol, textCol, output,
+              batchId = f.get("batch-id"))
+            else graft.ext.DedupIndex.build(df, idCol, textCol, output,
+              numHashes = f.get("num-hashes").map(_.toInt).getOrElse(64),
+              bands = f.get("bands").map(_.toInt).getOrElse(16),
+              shingleLen = f.get("shingle-len").map(_.toInt).getOrElse(5))
+          System.err.println(s"[graft] dedup index ${if (append) "+" else ""}$n docs at $output")
+        case t => throw new IllegalArgumentException(
+          s"--type must be text, ivf, ivfpq or dedup, got $t")
+      }
     }
   }
 
@@ -326,76 +332,67 @@ object Graft {
     *              [--id-col=qid] [--text-col=qtext] [--vec-col=qvec]
     *              [--k=10] [--nprobe=4] [--rrf-k=60]
     * }}} */
-  private def searchCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    import spark.implicits._
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def searchCmd(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      import spark.implicits._
+      val index = required(f, "index")
+      // query and re-rank sources honour --input-mode, not --row-restriction
+      def source(path: String) = read(spark, path, f.getOrElse("input-mode", "parquet"))
+      def queries = source(required(f, "queries"))
+      val result = required(f, "type") match {
+        case "text" =>
+          val qs = required(f, "query").split(";;").toSeq
+            .map(_.trim).filter(_.nonEmpty).zipWithIndex
+            .map { case (q, i) => (i.toLong, q) }
+          graft.ext.Retrieval.searchTextIndex(spark, index,
+            qs.toDF("qid", "qtext"), "qid", "qtext",
+            k = f.get("k").map(_.toInt).getOrElse(10))
+        case "ivf" =>
+          graft.ext.Similarity.searchIvfIndex(spark, index, queries,
+            f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
+            k = f.get("k").map(_.toInt).getOrElse(10),
+            nprobe = f.get("nprobe").map(_.toInt).getOrElse(4))
+        case "ivfpq" =>
+          graft.ext.Similarity.searchIvfPqIndex(spark, index, queries,
+            f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
+            k = f.get("k").map(_.toInt).getOrElse(10),
+            nprobe = f.get("nprobe").map(_.toInt).getOrElse(4),
+            rerankFactor = f.get("rerank-factor").map(_.toInt).getOrElse(4),
+            rerank = f.get("rerank-input").map(source))
+        case "dedup" =>
+          val incoming = queries
+          val textCol = f.getOrElse("text-col", "text")
+          f.getOrElse("mode", "near") match {
+            case "near" =>
+              graft.ext.DedupIndex.minhashNewAgainst(spark, index, incoming,
+                f.getOrElse("id-col", "doc_id"), textCol,
+                threshold = f.get("threshold").map(_.toDouble).getOrElse(0.8))
+            case "exact" =>
+              graft.ext.DedupIndex.newAgainst(spark, index, incoming, textCol)
+            case m => throw new IllegalArgumentException(
+              s"--mode must be near or exact, got $m")
+          }
+        case "hybrid" =>
+          // both legs served from persisted artifacts; rank-space fusion.
+          // --vec-index-type=ivfpq serves the vector leg from compressed
+          // postings (ADC ranks; add --rerank-input for exact re-scoring)
+          graft.ext.Retrieval.hybridSearchIndexes(spark, index,
+            required(f, "vec-index"), queries,
+            f.getOrElse("id-col", "qid"), f.getOrElse("text-col", "qtext"),
+            f.getOrElse("vec-col", "qvec"),
+            k = f.get("k").map(_.toInt).getOrElse(10),
+            kRrf = f.get("rrf-k").map(_.toInt).getOrElse(60),
+            nprobe = f.get("nprobe").map(_.toInt).getOrElse(4),
+            vecIndexType = f.getOrElse("vec-index-type", "ivf"),
+            rerank = f.get("rerank-input").map(source),
+            rerankFactor = f.get("rerank-factor").map(_.toInt).getOrElse(20),
+            rerankIdCol = f.get("rerank-id-col"),
+            rerankVecCol = f.get("rerank-vec-col"))
+        case t => throw new IllegalArgumentException(
+          s"--type must be text, ivf, ivfpq, dedup or hybrid, got $t")
+      }
+      write(result.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
     }
-    val index = required(f, "index")
-    val result = required(f, "type") match {
-      case "text" =>
-        val qs = required(f, "query").split(";;").toSeq
-          .map(_.trim).filter(_.nonEmpty).zipWithIndex
-          .map { case (q, i) => (i.toLong, q) }
-        graft.ext.Retrieval.searchTextIndex(spark, index,
-          qs.toDF("qid", "qtext"), "qid", "qtext",
-          k = f.get("k").map(_.toInt).getOrElse(10))
-      case "ivf" =>
-        val q = read(spark, required(f, "queries"),
-          f.getOrElse("input-mode", "parquet"))
-        graft.ext.Similarity.searchIvfIndex(spark, index, q,
-          f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
-          k = f.get("k").map(_.toInt).getOrElse(10),
-          nprobe = f.get("nprobe").map(_.toInt).getOrElse(4))
-      case "ivfpq" =>
-        val q = read(spark, required(f, "queries"),
-          f.getOrElse("input-mode", "parquet"))
-        graft.ext.Similarity.searchIvfPqIndex(spark, index, q,
-          f.getOrElse("id-col", "vec_id"), f.getOrElse("vec-col", "embedding"),
-          k = f.get("k").map(_.toInt).getOrElse(10),
-          nprobe = f.get("nprobe").map(_.toInt).getOrElse(4),
-          rerankFactor = f.get("rerank-factor").map(_.toInt).getOrElse(4),
-          rerank = f.get("rerank-input").map(p =>
-            read(spark, p, f.getOrElse("input-mode", "parquet"))))
-      case "dedup" =>
-        val incoming = read(spark, required(f, "queries"),
-          f.getOrElse("input-mode", "parquet"))
-        val textCol = f.getOrElse("text-col", "text")
-        f.getOrElse("mode", "near") match {
-          case "near" =>
-            graft.ext.DedupIndex.minhashNewAgainst(spark, index, incoming,
-              f.getOrElse("id-col", "doc_id"), textCol,
-              threshold = f.get("threshold").map(_.toDouble).getOrElse(0.8))
-          case "exact" =>
-            graft.ext.DedupIndex.newAgainst(spark, index, incoming, textCol)
-          case m => throw new IllegalArgumentException(
-            s"--mode must be near or exact, got $m")
-        }
-      case "hybrid" =>
-        // both legs served from persisted artifacts; rank-space fusion.
-        // --vec-index-type=ivfpq serves the vector leg from compressed
-        // postings (ADC ranks; add --rerank-input for exact re-scoring)
-        val q = read(spark, required(f, "queries"),
-          f.getOrElse("input-mode", "parquet"))
-        graft.ext.Retrieval.hybridSearchIndexes(spark, index,
-          required(f, "vec-index"), q,
-          f.getOrElse("id-col", "qid"), f.getOrElse("text-col", "qtext"),
-          f.getOrElse("vec-col", "qvec"),
-          k = f.get("k").map(_.toInt).getOrElse(10),
-          kRrf = f.get("rrf-k").map(_.toInt).getOrElse(60),
-          nprobe = f.get("nprobe").map(_.toInt).getOrElse(4),
-          vecIndexType = f.getOrElse("vec-index-type", "ivf"),
-          rerank = f.get("rerank-input").map(p =>
-            read(spark, p, f.getOrElse("input-mode", "parquet"))),
-          rerankFactor = f.get("rerank-factor").map(_.toInt).getOrElse(20),
-          rerankIdCol = f.get("rerank-id-col"),
-          rerankVecCol = f.get("rerank-vec-col"))
-      case t => throw new IllegalArgumentException(
-        s"--type must be text, ivf, ivfpq, dedup or hybrid, got $t")
-    }
-    write(result.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
-  }
 
   /** Format conversion — the reference CLI's core errand (ratatool's
     * Avro/BigQuery conversion tooling, re-expressed over this engine's IO
@@ -409,20 +406,16 @@ object Graft {
     *               [--columns=c1,c2] [--partition-by=c1,c2]
     *               [--row-restriction=<sql predicate>]
     * }}} */
-  private def convert(f: Map[String, String], spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val projected = csv(f.get("columns")) match {
-      case Nil  => df
-      case cols => df.select(cols.map(col): _*)
+  private def convert(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      import org.apache.spark.sql.functions.col
+      val df = input(spark, f)
+      val projected = csv(f.get("columns")) match {
+        case Nil  => df
+        case cols => df.select(cols.map(col): _*)
+      }
+      writeOutput(projected, out, f)
     }
-    if (!GraftIO.unlessDone(out) {
-      write(projected, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
 
   /** Engine extension: text cleanup ([[graft.ext.TextAnalysis]]) as a
     * one-shot job — NFC + control-strip normalization, optional PII-style
@@ -434,22 +427,16 @@ object Graft {
     *             [--redact] [--keep-control]
     *             [--input-mode=...] [--output-mode=...] [--row-restriction=<pred>]
     * }}} */
-  private def clean(f: Map[String, String], spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val textCol = f.getOrElse("text-col", "text")
-    var cleaned = graft.ext.TextAnalysis.normalizeText(col(textCol),
-      stripControl = !f.contains("keep-control"))
-    if (f.contains("redact"))
-      cleaned = graft.ext.TextAnalysis.redact(cleaned)
-    val result = df.withColumn(textCol, cleaned)
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
+  private def clean(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      import org.apache.spark.sql.functions.col
+      val textCol = f.getOrElse("text-col", "text")
+      var cleaned = graft.ext.TextAnalysis.normalizeText(col(textCol),
+        stripControl = !f.contains("keep-control"))
+      if (f.contains("redact"))
+        cleaned = graft.ext.TextAnalysis.redact(cleaned)
+      writeOutput(input(spark, f).withColumn(textCol, cleaned), out, f)
+    }
 
   /** Engine extension: exact frequent items ([[graft.ext.Frequent]]) as a
     * one-shot job — corpus vocabulary analysis, stopword/boilerplate-token
@@ -463,21 +450,17 @@ object Graft {
     *
     * With `--item-col` counts that column's values directly; otherwise
     * counts whitespace words of `--text-col`. Output: (item, cnt), exact. */
-  private def heavyWords(f: Map[String, String], spark: SparkSession): Unit = {
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val ppm = f.getOrElse("min-freq-ppm", "1000").toLong
-    val result = f.get("item-col") match {
-      case Some(c) => graft.ext.Frequent.heavyHitters(df, c, ppm)
-      case None =>
-        graft.ext.Frequent.heavyWords(df, f.getOrElse("text-col", "text"), ppm)
+  private def heavyWords(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      val df = input(spark, f)
+      val ppm = f.getOrElse("min-freq-ppm", "1000").toLong
+      val result = f.get("item-col") match {
+        case Some(c) => graft.ext.Frequent.heavyHitters(df, c, ppm)
+        case None =>
+          graft.ext.Frequent.heavyWords(df, f.getOrElse("text-col", "text"), ppm)
+      }
+      writeOutput(result, out, f)
     }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
 
   /** Engine extension: learned BPE tokenization ([[graft.ext.Bpe]]) as a
     * one-shot job: train merges on the input corpus, then tokenize it.
@@ -493,35 +476,32 @@ object Graft {
     * `--count-only`, + `n_bpe_tokens`. `--merges-output` also writes the
     * learned (rank, left, right) table for reuse/audit (parquet — byte-
     * level merge symbols include non-printable chars). `--byte-level`
-    * trains over the GPT-2-style 256-symbol UTF-8 byte alphabet (no OOV). */
-  private def bpeTokenize(f: Map[String, String], spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.col
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val textCol = f.getOrElse("text-col", "text")
-    val model = graft.ext.Bpe.train(df, textCol,
-      numMerges = f.getOrElse("num-merges", "8000").toInt,
-      maxWordTypes = f.getOrElse("max-word-types", "65536").toInt,
-      byteLevel = f.contains("byte-level"))
-    f.get("merges-output").foreach { mo =>
+    * trains over the GPT-2-style 256-symbol UTF-8 byte alphabet (no OOV).
+    * The command is complete only when both outputs are; otherwise it
+    * retrains and rewrites both, so they always come from one model. */
+  private def bpeTokenize(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f, o => (o +: f.get("merges-output").toSeq)
+        .forall(GraftIO.outputExists)) { out =>
+      import org.apache.spark.sql.functions.col
       import spark.implicits._
-      val merges = model.merges.zipWithIndex
-        .map { case ((a, b), r) => (r, a, b) }
-        .toDF("rank", "left", "right")
-      if (!GraftIO.unlessDone(mo) {
-        write(merges.coalesce(1), mo, "parquet", Nil)
-      }) System.err.println(s"[graft] merges $mo already complete, skipping")
+      val df = input(spark, f)
+      val textCol = f.getOrElse("text-col", "text")
+      val model = graft.ext.Bpe.train(df, textCol,
+        numMerges = f.getOrElse("num-merges", "8000").toInt,
+        maxWordTypes = f.getOrElse("max-word-types", "65536").toInt,
+        byteLevel = f.contains("byte-level"))
+      f.get("merges-output").foreach { mo =>
+        val merges = model.merges.zipWithIndex
+          .map { case ((a, b), r) => (r, a, b) }
+          .toDF("rank", "left", "right")
+        write(merges.coalesce(1), mo, "parquet")
+      }
+      val result =
+        if (f.contains("count-only"))
+          df.withColumn("n_bpe_tokens", model.tokenCountCol(col(textCol)))
+        else df.withColumn("bpe_tokens", model.encodeCol(col(textCol)))
+      writeOutput(result, out, f)
     }
-    val result =
-      if (f.contains("count-only"))
-        df.withColumn("n_bpe_tokens", model.tokenCountCol(col(textCol)))
-      else df.withColumn("bpe_tokens", model.encodeCol(col(textCol)))
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
 
   /** Engine extension: SemDeDup semantic dedup
     * ([[graft.ext.SemDedup.semanticDedup]]) as a one-shot job.
@@ -536,26 +516,22 @@ object Graft {
     * Default output is the DEDUPLICATED corpus (kept rows, original
     * schema); `--assignments-only` writes the full (id, cluster, keep,
     * oversized) audit table instead. */
-  private def semDedup(f: Map[String, String], spark: SparkSession): Unit = {
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val idCol = required(f, "id-col")
-    val r = graft.ext.SemDedup.semanticDedup(df, idCol,
-      required(f, "vec-col"), k = required(f, "k").toInt,
-      tau = f.getOrElse("tau", "0.95").toDouble,
-      seed = f.getOrElse("seed", "42").toLong,
-      maxClusterSize = f.getOrElse("max-cluster-size", "10000").toInt,
-      maxSplitRounds = f.getOrElse("max-split-rounds", "6").toInt)
-    val result =
-      if (f.contains("assignments-only")) r
-      else df.join(r.filter(org.apache.spark.sql.functions.col("keep"))
-        .select(org.apache.spark.sql.functions.col("id").as(idCol)), idCol)
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
+  private def semDedup(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      import org.apache.spark.sql.functions.col
+      val df = input(spark, f)
+      val idCol = required(f, "id-col")
+      val r = graft.ext.SemDedup.semanticDedup(df, idCol,
+        required(f, "vec-col"), k = required(f, "k").toInt,
+        tau = f.getOrElse("tau", "0.95").toDouble,
+        seed = f.getOrElse("seed", "42").toLong,
+        maxClusterSize = f.getOrElse("max-cluster-size", "10000").toInt,
+        maxSplitRounds = f.getOrElse("max-split-rounds", "6").toInt)
+      val result =
+        if (f.contains("assignments-only")) r
+        else df.join(r.filter(col("keep")).select(col("id").as(idCol)), idCol)
+      writeOutput(result, out, f)
+    }
 
   /** Engine extension: DSIR importance scoring / selection
     * ([[graft.ext.Importance]]) as a one-shot job.
@@ -572,34 +548,30 @@ object Graft {
     * whole input. With `--top-fraction`, Gumbel-resamples and writes the
     * SELECTED subset (original schema + score); otherwise writes
     * (id, n_tokens, imp_logratio) for every document. */
-  private def dsirScore(f: Map[String, String], spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val idCol = required(f, "id-col")
-    val textCol = f.getOrElse("text-col", "text")
-    val tgt = expr(stripQuoteWrap(required(f, "target")))
-    val scores =
-      if (f.contains("exact"))
-        graft.ext.Importance.importanceScores(df, idCol, textCol, tgt)
-      else graft.ext.Importance.hashedImportanceScores(df, idCol, textCol,
-        tgt, nBuckets = f.getOrElse("buckets", "8192").toInt,
-        ngramOrder = f.getOrElse("ngram", "1").toInt)
-    val result = f.get("top-fraction") match {
-      case None => scores
-      case Some(frac) =>
-        val joined = df.join(scores.select(col("id").as(idCol),
-          col("imp_logratio")), idCol)
-        graft.ext.Importance.gumbelTopFraction(joined, idCol, "imp_logratio",
-          frac.toDouble, f.getOrElse("temperature", "1.0").toDouble,
-          f.getOrElse("salt", "dsir"))
+  private def dsirScore(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      import org.apache.spark.sql.functions.{col, expr}
+      val df = input(spark, f)
+      val idCol = required(f, "id-col")
+      val textCol = f.getOrElse("text-col", "text")
+      val tgt = expr(stripQuoteWrap(required(f, "target")))
+      val scores =
+        if (f.contains("exact"))
+          graft.ext.Importance.importanceScores(df, idCol, textCol, tgt)
+        else graft.ext.Importance.hashedImportanceScores(df, idCol, textCol,
+          tgt, nBuckets = f.getOrElse("buckets", "8192").toInt,
+          ngramOrder = f.getOrElse("ngram", "1").toInt)
+      val result = f.get("top-fraction") match {
+        case None => scores
+        case Some(frac) =>
+          val joined = df.join(scores.select(col("id").as(idCol),
+            col("imp_logratio")), idCol)
+          graft.ext.Importance.gumbelTopFraction(joined, idCol, "imp_logratio",
+            frac.toDouble, f.getOrElse("temperature", "1.0").toDouble,
+            f.getOrElse("salt", "dsir"))
+      }
+      writeOutput(result, out, f)
     }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
 
   /** Engine extension: deterministic training-order shuffle
     * ([[graft.ext.Split.trainOrder]]) as a one-shot job. Writes
@@ -613,16 +585,12 @@ object Graft {
     *                  [--input-mode=...] [--output-mode=parquet|json]
     *                  [--row-restriction=<pred>]
     * }}} */
-  private def trainOrder(f: Map[String, String], spark: SparkSession): Unit = {
-    val df = restrict(read(spark, required(f, "input"),
-      f.getOrElse("input-mode", "parquet")), f)
-    val out = required(f, "output")
-    val ordered = graft.ext.Split.trainOrder(df, csv(f.get("key")),
-      salt = required(f, "salt"), numShards = f.getOrElse("shards", "256").toInt)
-    if (!GraftIO.unlessDone(out) {
+  private def trainOrder(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      val ordered = graft.ext.Split.trainOrder(input(spark, f), csv(f.get("key")),
+        salt = required(f, "salt"), numShards = f.getOrElse("shards", "256").toInt)
       write(ordered, out, f.getOrElse("output-mode", "parquet"), Seq("shard"))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
+    }
 
   /** Engine extension: the Gopher-rule quality filter
     * ([[graft.ext.TextAnalysis.gopherFilter]]) as a one-shot curation job.
@@ -645,47 +613,43 @@ object Graft {
     * profile passes its own `--stopwords` list (empty string disables the
     * rule) plus whatever thresholds its script needs (CJK text typically
     * wants `--min-alpha-frac=0`). */
-  private def gopherFilter(f: Map[String, String], spark: SparkSession): Unit = {
-    val input = required(f, "input")
-    val out = required(f, "output")
-    val df = restrict(read(spark, input, f.getOrElse("input-mode", "parquet")), f)
-    val textCol = f.getOrElse("text-col", "text")
-    val minWords = f.getOrElse("min-words", "50").toLong
-    val maxWords = f.getOrElse("max-words", "100000").toLong
-    val minMWL = f.getOrElse("min-mean-word-len", "3.0").toDouble
-    val maxMWL = f.getOrElse("max-mean-word-len", "10.0").toDouble
-    val maxSym = f.getOrElse("max-symbol-ratio", "0.1").toDouble
-    val maxBullet = f.getOrElse("max-bullet-frac", "0.9").toDouble
-    val maxEllipsis = f.getOrElse("max-ellipsis-frac", "0.3").toDouble
-    val minAlpha = f.getOrElse("min-alpha-frac", "0.8").toDouble
-    val minStopHits = f.getOrElse("min-stopword-hits", "2").toLong
-    val stopwords = f.get("stopwords") match {
-      case None => graft.ext.TextAnalysis.DefaultGopherStopwords
-      case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    }
-    // --repetition adds the Table A1 repetition rules (dup line/para,
-    // top/dup n-gram char fractions) to the base rule set
-    val result =
-      if (f.contains("signals-only")) {
-        val sig = graft.ext.TextAnalysis.gopherSignals(df, textCol,
-          minWords, maxWords, minMWL, maxMWL, maxSym, maxBullet,
-          maxEllipsis, minAlpha, minStopHits, stopwords)
-        if (f.contains("repetition"))
-          graft.ext.TextAnalysis.repetitionSignals(sig, textCol)
-        else sig
-      } else {
-        val kept = graft.ext.TextAnalysis.gopherFilter(df, textCol,
-          minWords, maxWords, minMWL, maxMWL, maxSym, maxBullet,
-          maxEllipsis, minAlpha, minStopHits, stopwords)
-        if (f.contains("repetition"))
-          graft.ext.TextAnalysis.repetitionFilter(kept, textCol)
-        else kept
+  private def gopherFilter(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      val df = input(spark, f)
+      val textCol = f.getOrElse("text-col", "text")
+      val minWords = f.getOrElse("min-words", "50").toLong
+      val maxWords = f.getOrElse("max-words", "100000").toLong
+      val minMWL = f.getOrElse("min-mean-word-len", "3.0").toDouble
+      val maxMWL = f.getOrElse("max-mean-word-len", "10.0").toDouble
+      val maxSym = f.getOrElse("max-symbol-ratio", "0.1").toDouble
+      val maxBullet = f.getOrElse("max-bullet-frac", "0.9").toDouble
+      val maxEllipsis = f.getOrElse("max-ellipsis-frac", "0.3").toDouble
+      val minAlpha = f.getOrElse("min-alpha-frac", "0.8").toDouble
+      val minStopHits = f.getOrElse("min-stopword-hits", "2").toLong
+      val stopwords = f.get("stopwords") match {
+        case None => graft.ext.TextAnalysis.DefaultGopherStopwords
+        case Some(s) => s.split(",").map(_.trim).filter(_.nonEmpty).toSeq
       }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
+      // --repetition adds the Table A1 repetition rules (dup line/para,
+      // top/dup n-gram char fractions) to the base rule set
+      val result =
+        if (f.contains("signals-only")) {
+          val sig = graft.ext.TextAnalysis.gopherSignals(df, textCol,
+            minWords, maxWords, minMWL, maxMWL, maxSym, maxBullet,
+            maxEllipsis, minAlpha, minStopHits, stopwords)
+          if (f.contains("repetition"))
+            graft.ext.TextAnalysis.repetitionSignals(sig, textCol)
+          else sig
+        } else {
+          val kept = graft.ext.TextAnalysis.gopherFilter(df, textCol,
+            minWords, maxWords, minMWL, maxMWL, maxSym, maxBullet,
+            maxEllipsis, minAlpha, minStopHits, stopwords)
+          if (f.contains("repetition"))
+            graft.ext.TextAnalysis.repetitionFilter(kept, textCol)
+          else kept
+        }
+      writeOutput(result, out, f)
+    }
 
   /** Engine extension beyond the reference CLI: the per-group dataset
     * card ([[graft.ext.TextAnalysis.corpusReport]]) as a one-shot job.
@@ -695,17 +659,12 @@ object Graft {
     *                    [--group-by=lang,source] [--input-mode=parquet|avro|json]
     *                    [--output-mode=parquet|json] [--row-restriction=<pred>]
     * }}} */
-  private def corpusReport(f: Map[String, String], spark: SparkSession): Unit = {
-    val input = f.getOrElse("input", sys.error("--input is required"))
-    val output = f.getOrElse("output", sys.error("--output is required"))
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def corpusReport(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      val rep = graft.ext.TextAnalysis.corpusReport(input(spark, f),
+        f.getOrElse("text-col", "text"), csv(f.get("group-by")))
+      write(rep.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
     }
-    val df = restrict(read(spark, input, f.getOrElse("input-mode", "parquet")), f)
-    val rep = graft.ext.TextAnalysis.corpusReport(df,
-      f.getOrElse("text-col", "text"), csv(f.get("group-by")))
-    write(rep.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
-  }
 
   /** Engine extension: pre-drop duplication audit ([[graft.ext.Dedup
     * .dedupReport]]) — cluster-size histogram, optionally with per-
@@ -717,46 +676,43 @@ object Graft {
     * }}}
     * `exact` groups byte-identical text (fingerprint components); `near`
     * clusters banded-minhash near-duplicates first. */
-  private def dedupReportCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    import org.apache.spark.sql.functions.{col, lit, min}
-    val input = f.getOrElse("input", sys.error("--input is required"))
-    val output = f.getOrElse("output", sys.error("--output is required"))
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
+  private def dedupReportCmd(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { output =>
+      import org.apache.spark.sql.functions.{col, lit, min}
+      val df = input(spark, f)
+      val id = f.getOrElse("id-col", "doc_id")
+      val text = f.getOrElse("text-col", "text")
+      val comp = f.getOrElse("mode", "exact") match {
+        case "exact" =>
+          val rep = df.select(col(id).as("id"),
+            graft.GraftFunctions.farmHash64(col(text)).as("__f"))
+          rep.join(rep.groupBy("__f").agg(min(col("id")).as("component")), "__f")
+            .select("id", "component")
+        case "near" =>
+          graft.ext.Dedup.connectedComponents(
+            graft.ext.Dedup.minhashNearDups(df, id, text,
+              numHashes = f.getOrElse("num-hashes", "64").toInt,
+              bands = f.getOrElse("bands", "16").toInt,
+              shingleLen = f.getOrElse("shingle-len", "5").toInt,
+              threshold = f.getOrElse("threshold", "0.8").toDouble))
+        case other => throw new IllegalArgumentException(
+          s"--mode must be exact|near, got $other")
+      }
+      val hist = graft.ext.Dedup.dedupReport(df, id, comp)
+        .select(lit("size").as("kind"),
+          col("cluster_size").cast("string").as("key"),
+          col("n_clusters"), col("n_docs"), col("n_redundant"))
+      val rep = f.get("by") match {
+        case Some(by) => hist.unionByName(
+          graft.ext.Dedup.dedupReportBy(df, id, comp, by)
+            .select(lit(by).as("kind"), col(by).cast("string").as("key"),
+              lit(null).cast("long").as("n_clusters"),
+              col("n_docs"), col("n_redundant")))
+        case None => hist
+      }
+      write(rep.coalesce(1).orderBy("kind", "key"), output,
+        f.getOrElse("output-mode", "parquet"))
     }
-    val df = restrict(read(spark, input, f.getOrElse("input-mode", "parquet")), f)
-    val id = f.getOrElse("id-col", "doc_id")
-    val text = f.getOrElse("text-col", "text")
-    val comp = f.getOrElse("mode", "exact") match {
-      case "exact" =>
-        val rep = df.select(col(id).as("id"),
-          graft.GraftFunctions.farmHash64(col(text)).as("__f"))
-        rep.join(rep.groupBy("__f").agg(min(col("id")).as("component")), "__f")
-          .select("id", "component")
-      case "near" =>
-        graft.ext.Dedup.connectedComponents(
-          graft.ext.Dedup.minhashNearDups(df, id, text,
-            numHashes = f.getOrElse("num-hashes", "64").toInt,
-            bands = f.getOrElse("bands", "16").toInt,
-            shingleLen = f.getOrElse("shingle-len", "5").toInt,
-            threshold = f.getOrElse("threshold", "0.8").toDouble))
-      case other => sys.error(s"--mode must be exact|near, got $other")
-    }
-    val hist = graft.ext.Dedup.dedupReport(df, id, comp)
-      .select(lit("size").as("kind"),
-        col("cluster_size").cast("string").as("key"),
-        col("n_clusters"), col("n_docs"), col("n_redundant"))
-    val rep = f.get("by") match {
-      case Some(by) => hist.unionByName(
-        graft.ext.Dedup.dedupReportBy(df, id, comp, by)
-          .select(lit(by).as("kind"), col(by).cast("string").as("key"),
-            lit(null).cast("long").as("n_clusters"),
-            col("n_docs"), col("n_redundant")))
-      case None => hist
-    }
-    write(rep.coalesce(1).orderBy("kind", "key"), output,
-      f.getOrElse("output-mode", "parquet"))
-  }
 
   private[cli] def read(spark: SparkSession, path: String, mode: String): DataFrame =
     mode match {
@@ -771,66 +727,60 @@ object Graft {
         // text corpora embed newlines; default line-mode parsing would
         // split quoted multi-line fields into garbage rows
         .option("multiLine", "true").csv(path)
-      // length-delimited protobuf wire files, schema from the original
-      // .proto source (reference: sc.protobufFile with a protoc-compiled
-      // class — BigDiffy.scala:339): --input-mode=proto:<schema.proto>:<Message>
-      case m if m.startsWith("proto:") => m.split(":", 3) match {
-        case Array(_, protoFile, message) =>
-          val descs = graft.sources.ProtoWire.parseProtoFile(protoFile)
-          val desc = descs.getOrElse(message, throw new IllegalArgumentException(
-            s"message '$message' not found in $protoFile " +
-              s"(declared: ${descs.keys.toSeq.sorted.mkString(", ")})"))
-          graft.sources.ProtoWire.readDelimited(spark, path, desc)
-        case _ => throw new IllegalArgumentException(
-          "proto mode needs proto:<schema.proto>:<MessageName>")
-      }
+      case m if m.startsWith("proto:") =>
+        ProtoWire.readDelimited(spark, path, protoMessage(m))
       case m => throw new IllegalArgumentException(s"unknown input-mode $m")
     }
+
+  /** Length-delimited protobuf wire files, schema from the original .proto
+    * source (reference: sc.protobufFile with a protoc-compiled class —
+    * BigDiffy.scala:339): `proto:<schema.proto>:<Message>` names the file
+    * and the message, for both --input-mode and --output-mode. */
+  private def protoMessage(mode: String): ProtoWire.PMessage = mode.split(":", 3) match {
+    case Array(_, protoFile, message) =>
+      val descs = ProtoWire.parseProtoFile(protoFile)
+      descs.getOrElse(message, throw new IllegalArgumentException(
+        s"message '$message' not found in $protoFile " +
+          s"(declared: ${descs.keys.toSeq.sorted.mkString(", ")})"))
+    case _ => throw new IllegalArgumentException(
+      "proto mode needs proto:<schema.proto>:<MessageName>")
+  }
 
   /** `partitionBy` is the engine's analog of the reference's BQ
     * time-partitioned sink (S12, BigSamplerBigQuery.scala:187-199):
     * directory partitioning on the named columns (avro sink excluded —
     * the avro-mapred path has no partitioned committer). */
   private[cli] def write(df: DataFrame, path: String, mode: String,
-                    partitionBy: Seq[String] = Nil): Unit = mode match {
-    case "parquet" =>
+                    partitionBy: Seq[String] = Nil): Unit = {
+    def files = {
       val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-    case "orc" =>
-      val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-    case "avro" =>
-      require(partitionBy.isEmpty, "--partition-by is not supported for avro output")
-      AvroIO.write(df, path)
-    case "json" =>
-      val w = df.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).json(path)
-    case "csv" =>
-      // arrays/structs don't fit CSV cells: fail here with a clear message
-      // instead of Spark's deep AnalysisException
-      import org.apache.spark.sql.types.{ArrayType, MapType, StructType, NullType, BinaryType}
-      val bad = df.schema.fields.filter(f => f.dataType match {
-        case _: ArrayType | _: MapType | _: StructType | NullType |
-             BinaryType => true
-        case _ => false
-      })
-      require(bad.isEmpty,
-        s"--output-mode=csv needs atomic columns; non-atomic: ${bad.map(_.name).mkString(", ")}")
-      val w = df.write.mode("overwrite").option("header", "true")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).csv(path)
-    case m if m.startsWith("proto:") => m.split(":", 3) match {
-      case Array(_, protoFile, message) =>
-        require(partitionBy.isEmpty,
-          "--partition-by is not supported for proto output")
-        val descs = graft.sources.ProtoWire.parseProtoFile(protoFile)
-        val desc = descs.getOrElse(message, throw new IllegalArgumentException(
-          s"message '$message' not found in $protoFile " +
-            s"(declared: ${descs.keys.toSeq.sorted.mkString(", ")})"))
-        graft.sources.ProtoWire.writeDelimited(df, desc, path)
-      case _ => throw new IllegalArgumentException(
-        "proto mode needs proto:<schema.proto>:<MessageName>")
+      if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w
     }
-    case m => throw new IllegalArgumentException(s"unknown output-mode $m")
+    mode match {
+      case "parquet" => files.parquet(path)
+      case "orc"     => files.orc(path)
+      case "json"    => files.json(path)
+      case "avro" =>
+        require(partitionBy.isEmpty, "--partition-by is not supported for avro output")
+        AvroIO.write(df, path)
+      case "csv" =>
+        // arrays/structs don't fit CSV cells: fail here with a clear message
+        // instead of Spark's deep AnalysisException
+        import org.apache.spark.sql.types.{ArrayType, MapType, StructType, NullType, BinaryType}
+        val bad = df.schema.fields.filter(f => f.dataType match {
+          case _: ArrayType | _: MapType | _: StructType | NullType |
+               BinaryType => true
+          case _ => false
+        })
+        require(bad.isEmpty,
+          s"--output-mode=csv needs atomic columns; non-atomic: ${bad.map(_.name).mkString(", ")}")
+        files.option("header", "true").csv(path)
+      case m if m.startsWith("proto:") =>
+        val msg = protoMessage(m)
+        require(partitionBy.isEmpty, "--partition-by is not supported for proto output")
+        ProtoWire.writeDelimited(df, msg, path)
+      case m => throw new IllegalArgumentException(s"unknown output-mode $m")
+    }
   }
 
   private[cli] def required(f: Map[String, String], k: String): String =
@@ -867,82 +817,75 @@ object Graft {
     else p
   }
 
-  private def bigDiffy(f: Map[String, String], spark: SparkSession): Unit = {
-    val mode = f.getOrElse("input-mode", "parquet")
-    val lhs = restrict(read(spark, required(f, "lhs"), mode), f)
-    val rhs = restrict(read(spark, required(f, "rhs"), mode), f)
-    val keys = csv(f.get("key"))
-    require(keys.nonEmpty, "missing required --key")
-    val opts = DiffOptions(
-      ignore = csv(f.get("ignore-fields")).toSet,
-      unordered = csv(f.get("unordered")).toSet,
-      unorderedFieldKeys = csv(f.get("unordered-keys")).map { s =>
-        val Array(a, b) = s.split(':'); a -> b
-      }.toMap,
-      ignoreNan = f.contains("ignore-nan"))
-    val out = required(f, "output")
-    // saveStats overlaps keys+fields then writes global LAST — the
-    // _SUCCESS marker of the LAST relation (global) is the completion
-    // witness for the whole output. Done also requires fields/_SUCCESS:
-    // an OLDER binary wrote global FIRST, so a crash under the old order
-    // could leave global complete with keys/fields missing — checking
-    // global alone would false-skip that partial output forever, while
-    // (global && fields) is complete under BOTH write orders (the new
-    // order settles keys+fields before global ever lands).
-    val done = GraftIO.outputExists(s"$out/global") &&
-      GraftIO.outputExists(s"$out/fields")
-    if (done)
-      System.err.println(s"[graft] output $out already complete, skipping")
-    else
-      BigDiffy.saveStats(BigDiffy.diff(lhs, rhs, keys, opts), out,
-        ignoreNan = opts.ignoreNan)
-  }
+  // saveStats overlaps keys+fields then writes global LAST — the
+  // _SUCCESS marker of the LAST relation (global) is the completion
+  // witness for the whole output. Done also requires fields/_SUCCESS:
+  // an OLDER binary wrote global FIRST, so a crash under the old order
+  // could leave global complete with keys/fields missing — checking
+  // global alone would false-skip that partial output forever, while
+  // (global && fields) is complete under BOTH write orders (the new
+  // order settles keys+fields before global ever lands).
+  private def bigDiffy(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f, o => GraftIO.outputExists(s"$o/global") &&
+        GraftIO.outputExists(s"$o/fields")) { out =>
+      val lhs = input(spark, f, "lhs")
+      val rhs = input(spark, f, "rhs")
+      val keys = csv(f.get("key"))
+      require(keys.nonEmpty, "missing required --key")
+      val opts = DiffOptions(
+        ignore = csv(f.get("ignore-fields")).toSet,
+        unordered = csv(f.get("unordered")).toSet,
+        unorderedFieldKeys = csv(f.get("unordered-keys")).map { s =>
+          val Array(a, b) = s.split(':'); a -> b
+        }.toMap,
+        ignoreNan = f.contains("ignore-nan"))
+      // the stats views share one cached keyed relation: release it once
+      // the three relations are written, whether or not the write succeeded
+      val result = BigDiffy.diff(lhs, rhs, keys, opts)
+      try BigDiffy.saveStats(result, out, ignoreNan = opts.ignoreNan)
+      finally result.unpersist()
+    }
 
-  private def bigSampler(f: Map[String, String], spark: SparkSession): Unit = {
-    val mode = f.getOrElse("input-mode", "parquet")
-    // validate required flags before any IO so a typo'd invocation fails
-    // with the missing flag, not a path error from the wrong stage
-    val input = required(f, "input")
-    val out = required(f, "output")
-    val fraction = required(f, "sample").toDouble
-    val df = restrict(read(spark, input, mode), f)
-    val det: BigSampler.Determinism = csv(f.get("fields")) match {
-      case Nil => BigSampler.Random(f.get("seed").map(_.toLong).getOrElse(42L))
-      case fs => BigSampler.Hashed(fs,
-        f.getOrElse("hash-algorithm", "farm"),
-        f.get("seed").map(_.toInt),
-        graft.functions.ByteEncoding.fromString(f.getOrElse("byte-encoding", "raw")))
-    }
-    val dist: BigSampler.Distribution = f.get("distribution") match {
-      case None => BigSampler.NoDistribution
-      case Some("stratified") => BigSampler.Stratified(csv(f.get("distribution-fields")))
-      case Some("uniform")    => BigSampler.Uniform(csv(f.get("distribution-fields")))
-      case Some(d) => throw new IllegalArgumentException(s"unknown distribution $d")
-    }
-    if (!GraftIO.unlessDone(out) {
+  private def bigSampler(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      // validate required flags before any IO so a typo'd invocation fails
+      // with the missing flag, not a path error from the wrong stage
+      val fraction = required(f, "sample").toDouble
+      val df = input(spark, f)
+      val det: BigSampler.Determinism = csv(f.get("fields")) match {
+        case Nil => BigSampler.Random(f.get("seed").map(_.toLong).getOrElse(42L))
+        case fs => BigSampler.Hashed(fs,
+          f.getOrElse("hash-algorithm", "farm"),
+          f.get("seed").map(_.toInt),
+          graft.functions.ByteEncoding.fromString(f.getOrElse("byte-encoding", "raw")))
+      }
+      val dist: BigSampler.Distribution = f.get("distribution") match {
+        case None => BigSampler.NoDistribution
+        case Some("stratified") => BigSampler.Stratified(csv(f.get("distribution-fields")))
+        case Some("uniform")    => BigSampler.Uniform(csv(f.get("distribution-fields")))
+        case Some(d) => throw new IllegalArgumentException(s"unknown distribution $d")
+      }
       write(BigSampler.sample(df, fraction, det, dist, exact = f.contains("exact")),
-        out, f.getOrElse("output-mode", mode), csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
-
-  private def directSampler(f: Map[String, String], spark: SparkSession): Unit = {
-    val mode = f.getOrElse("input-mode", "parquet")
-    val input = required(f, "input")
-    val out = required(f, "output")
-    val n = required(f, "n").toInt
-    val df = read(spark, input, mode)
-    val sampled = f.getOrElse("mode", "head") match {
-      case "head"      => DirectSampler.head(df, n, csv(f.get("order-by")))
-      case "reservoir" => DirectSampler.reservoir(df, n,
-        f.get("seed").map(_.toLong).getOrElse(42L))
-      // deterministic k rows per key (k-shot-per-class): -n is k,
-      // --per-key names the class columns
-      case "perKey"    => DirectSampler.kPerKey(df, csv(f.get("per-key")), n,
-        f.get("seed").map(_.toInt).getOrElse(0))
-      case m => throw new IllegalArgumentException(s"unknown sampler mode $m")
+        out, f.getOrElse("output-mode", f.getOrElse("input-mode", "parquet")),
+        csv(f.get("partition-by")))
     }
-    if (!GraftIO.unlessDone(out) {
+
+  /** Reads `--input` whole: directSampler takes no --row-restriction. */
+  private def directSampler(f: Map[String, String], spark: SparkSession): Unit =
+    guarded(f) { out =>
+      val mode = f.getOrElse("input-mode", "parquet")
+      val n = required(f, "n").toInt
+      val df = read(spark, required(f, "input"), mode)
+      val sampled = f.getOrElse("mode", "head") match {
+        case "head"      => DirectSampler.head(df, n, csv(f.get("order-by")))
+        case "reservoir" => DirectSampler.reservoir(df, n,
+          f.get("seed").map(_.toLong).getOrElse(42L))
+        // deterministic k rows per key (k-shot-per-class): -n is k,
+        // --per-key names the class columns
+        case "perKey"    => DirectSampler.kPerKey(df, csv(f.get("per-key")), n,
+          f.get("seed").map(_.toInt).getOrElse(0))
+        case m => throw new IllegalArgumentException(s"unknown sampler mode $m")
+      }
       write(sampled, out, f.getOrElse("output-mode", mode))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
-  }
+    }
 }

@@ -62,10 +62,6 @@ object GraftIO {
       .option("timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
       .json(path)
 
-  /** Parquet schema sniff without reading data (footer-only, S15). */
-  def parquetSchema(spark: SparkSession, path: String): StructType =
-    spark.read.parquet(path).schema
-
   /** Read a parquet source whose schema contains TIMESTAMP(NANOS) columns,
     * surfacing them as raw LONG nanos — WITHOUT mutating the session.
     *

@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.core.SchemaPaths
 import graft.diffy.CaseClassDiffy
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
 case class CliRec(k: Long, v: Double, s: String)
@@ -15,6 +16,18 @@ class GraftCliSpec extends SparkSpec {
 
   private def tmp(): String = graft.SparkSpec.tempDir("cli").toString
 
+  private def deleteTree(dir: String): Unit =
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+
+  /** What `body` prints to System.err (where the CLI's `[graft]` lines go). */
+  private def stderrOf(body: => Unit): String = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val orig = System.err
+    System.setErr(new java.io.PrintStream(buf, true, "UTF-8"))
+    try body finally System.setErr(orig)
+    buf.toString("UTF-8")
+  }
+
   behavior of "graft CLI"
 
   it should "run bigDiffy end-to-end and write the three stats relations" in {
@@ -22,8 +35,13 @@ class GraftCliSpec extends SparkSpec {
     val l = Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v")
     val r = Seq((1L, 1.5), (3L, 3.0)).toDF("k", "v")
     l.write.parquet(s"$base/lhs"); r.write.parquet(s"$base/rhs")
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    spark.catalog.clearCache()
     Graft.run(Seq("bigDiffy", s"--lhs=$base/lhs", s"--rhs=$base/rhs",
       "--key=k", s"--output=$base/out"), spark)
+    // the keyed relation the three stats views share is released
+    cache.isEmpty shouldBe true
     val global = spark.read.option("header", "true").option("sep", "\t")
       .csv(s"$base/out/global").head()
     global.getString(0) shouldBe "3" // num_total
@@ -579,6 +597,74 @@ class GraftCliSpec extends SparkSpec {
         "index|search|pipeline> [flags]; got Some(frobnicate)"
     an[IllegalArgumentException] should be thrownBy
       Graft.run(Seq("bigSampler", "--input=/x"), spark)
+    the[IllegalArgumentException] thrownBy
+      Graft.run(Seq("corpusReport", "--output=/x"), spark) should have message
+      "missing required --input"
+    the[IllegalArgumentException] thrownBy
+      Graft.run(Seq("dedupReport", "--input=/x"), spark) should have message
+      "missing required --output"
+    val base = tmp()
+    Seq((1L, "a b")).toDF("doc_id", "text").write.parquet(s"$base/in")
+    the[IllegalArgumentException] thrownBy
+      Graft.run(Seq("dedupReport", s"--input=$base/in", s"--output=$base/out",
+        "--mode=fuzzy"), spark) should have message
+      "--mode must be exact|near, got fuzzy"
+  }
+
+  it should "skip every guarded command on a complete output before reading its input" in {
+    import org.apache.spark.sql.functions.col
+    val base = tmp()
+    val docs = (0L until 40L).map(i => (i, s"alpha beta w${i % 7} gamma doc$i",
+      if (i % 2 == 0) "en" else "de")).toDF("doc_id", "text", "lang")
+    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+      .filter(col("vec_id") < 40)
+    docs.write.parquet(s"$base/tidx_in")
+    Graft.run(Seq("index", s"--input=$base/tidx_in", s"--output=$base/tidx",
+      "--type=text", "--buckets=4"), spark)
+    // (command, its input dirs, flags beyond --output); --output is $base/<command>
+    val cases = Seq[(String, Seq[(String, DataFrame)], Seq[String])](
+      ("profile", Seq("input" -> docs), Nil),
+      ("compact", Seq("input" -> docs), Seq("--target-bytes=1000000")),
+      ("cluster", Seq("input" -> emb), Seq("--k=2")),
+      ("convert", Seq("input" -> docs), Seq("--output-mode=json")),
+      ("clean", Seq("input" -> docs), Nil),
+      ("heavyWords", Seq("input" -> docs), Nil),
+      ("bpeTokenize", Seq("input" -> docs),
+        Seq("--num-merges=10", s"--merges-output=$base/merges")),
+      ("semDedup", Seq("input" -> emb),
+        Seq("--id-col=vec_id", "--vec-col=embedding", "--k=2")),
+      ("dsirScore", Seq("input" -> docs),
+        Seq("--id-col=doc_id", "--target=lang = 'en'", "--exact")),
+      ("trainOrder", Seq("input" -> docs), Seq("--key=doc_id", "--salt=s", "--shards=2")),
+      ("gopherFilter", Seq("input" -> docs), Nil),
+      ("corpusReport", Seq("input" -> docs), Seq("--group-by=lang")),
+      ("dedupReport", Seq("input" -> docs), Nil),
+      ("bigSampler", Seq("input" -> docs), Seq("--sample=0.5", "--fields=doc_id")),
+      ("directSampler", Seq("input" -> docs), Seq("-n=3")),
+      ("bigDiffy", Seq("lhs" -> docs, "rhs" -> docs.limit(30)), Seq("--key=doc_id")),
+      ("search", Nil, Seq(s"--index=$base/tidx", "--type=text", "--query=alpha")))
+    for ((cmd, inputs, flags) <- cases) withClue(s"$cmd: ") {
+      val out = s"$base/$cmd"
+      val inFlags = inputs.map { case (flag, df) =>
+        val dir = s"$base/${cmd}_$flag"
+        df.write.parquet(dir)
+        s"--$flag=$dir"
+      }
+      val args = (cmd +: inFlags) ++ (s"--output=$out" +: flags)
+      Graft.run(args, spark)
+      inputs.foreach { case (flag, _) => deleteTree(s"$base/${cmd}_$flag") }
+      if (cmd == "search") deleteTree(s"$base/tidx")
+      stderrOf(Graft.run(args, spark)) should include regex
+        s"(?m)^\\[graft\\] output \\Q$out\\E .*skipping$$"
+    }
+    // an append's whole point is that the target exists: it still lands
+    Graft.run(Seq("index", s"--input=$base/tidx_in", s"--output=$base/tidx2",
+      "--type=text", "--buckets=4"), spark)
+    docs.withColumn("doc_id", col("doc_id") + 1000L).write.parquet(s"$base/more")
+    Graft.run(Seq("index", s"--input=$base/more", s"--output=$base/tidx2",
+      "--type=text", "--append", "--batch-id=b1"), spark)
+    spark.read.parquet(s"$base/tidx2/stats").agg(
+      org.apache.spark.sql.functions.sum("n_docs")).head().getLong(0) shouldBe 80L
   }
 
   it should "run semDedup in dedup and audit modes" in {
