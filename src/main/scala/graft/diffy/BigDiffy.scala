@@ -107,38 +107,29 @@ object BigDiffy {
   val MissingLhs = "MISSING_LHS"
   val MissingRhs = "MISSING_RHS"
 
-  /** @param enforceUniqueKeys reference semantics: more than one record per
-    *        key per side fails the job (BigDiffy.scala:240-242). The check
-    *        rides INSIDE the join pass: each side pre-aggregates by key
-    *        (keeping the row plus a per-key count) under the same hash
-    *        partitioning the join needs — no extra exchange, no extra
-    *        job — and a `raise_error` guard fails the first action that
-    *        touches a duplicated key. Opt out for pre-validated inputs. */
+  /** Keys must be unique per side (reference semantics: more than one
+    * record per key per side fails the job, BigDiffy.scala:240-242). The
+    * check rides INSIDE the join pass: each side pre-aggregates by key
+    * (keeping the row plus a per-key count) under the same hash
+    * partitioning the join needs — no extra exchange, no extra job — and
+    * a `raise_error` guard fails the first action that touches a
+    * duplicated key. */
   def diff(lhs: DataFrame, rhs: DataFrame, keys: Seq[String],
-           opts: DiffOptions = DiffOptions(),
-           enforceUniqueKeys: Boolean = true): DiffResult = {
-    val l0 = SchemaPaths.keyBy(lhs, keys, "__l")
-    val r0 = SchemaPaths.keyBy(rhs, keys, "__r")
+           opts: DiffOptions = DiffOptions()): DiffResult = {
     // the dup-key guard costs nothing extra at scale: the per-side
     // aggregate shuffles on __key exactly like the raw join would, the
     // join then reuses that partitioning (PlanSpec: still 2 exchanges),
     // and with unique keys first() just passes the single row through
-    val (l, r) =
-      if (enforceUniqueKeys)
-        (l0.groupBy("__key").agg(first("__l").as("__l"),
-           count(lit(1)).as("__lcnt")),
-         r0.groupBy("__key").agg(first("__r").as("__r"),
-           count(lit(1)).as("__rcnt")))
-      else (l0, r0)
-    val joined = l.join(r, Seq("__key"), "full_outer")
+    def byKey(df: DataFrame, v: String) = SchemaPaths.keyBy(df, keys, v)
+      .groupBy("__key").agg(first(v).as(v), count(lit(1)).as(s"${v}cnt"))
+    val joined = byKey(lhs, "__l").join(byKey(rhs, "__r"), Seq("__key"), "full_outer")
 
     def dupMsg(side: String, cnt: Column): Column =
       concat(lit(s"$side: key '"), col("__key"), lit("' appears "),
         cnt.cast(StringType), lit(" times; keys must be unique per side " +
           "(reference BigDiffy.scala:240-242)"))
-    val guard: Column => Column =
-      if (!enforceUniqueKeys) identity
-      else c => when(col("__lcnt") > 1, raise_error(dupMsg("lhs", col("__lcnt"))))
+    def guard(c: Column): Column =
+      when(col("__lcnt") > 1, raise_error(dupMsg("lhs", col("__lcnt"))))
         .when(col("__rcnt") > 1, raise_error(dupMsg("rhs", col("__rcnt"))))
         .otherwise(c)
 
@@ -266,18 +257,6 @@ object BigDiffy {
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     new DiffResult(keyed)
-  }
-
-  /** Reference semantics: keys must be unique per side — more than one
-    * record per key is an error (BigDiffy.scala:240-242). Runs one cheap
-    * aggregate per side; call before `diff` when inputs are untrusted. */
-  def assertUniqueKeys(df: DataFrame, keys: Seq[String], side: String): Unit = {
-    val dup = df.groupBy(SchemaPaths.multiKey(df.schema, keys).as("__key"))
-      .count().filter(col("count") > 1).limit(1).collect()
-    if (dup.nonEmpty)
-      throw new IllegalArgumentException(
-        s"$side: key '${dup.head.getString(0)}' appears ${dup.head.getLong(1)} times; " +
-          "keys must be unique per side (reference BigDiffy.scala:240-242)")
   }
 
   /** Write the three stats views as TSV-with-header (reference saveStats +

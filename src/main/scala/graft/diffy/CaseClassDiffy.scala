@@ -10,7 +10,6 @@ import org.apache.spark.sql.Dataset
   * directly and every delta/typing/stats rule applies unchanged. */
 object CaseClassDiffy {
   def diffDatasets[T](lhs: Dataset[T], rhs: Dataset[T], keys: Seq[String],
-                      opts: DiffOptions = DiffOptions(),
-                      enforceUniqueKeys: Boolean = true): DiffResult =
-    BigDiffy.diff(lhs.toDF(), rhs.toDF(), keys, opts, enforceUniqueKeys)
+                      opts: DiffOptions = DiffOptions()): DiffResult =
+    BigDiffy.diff(lhs.toDF(), rhs.toDF(), keys, opts)
 }

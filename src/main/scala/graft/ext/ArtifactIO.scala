@@ -689,7 +689,11 @@ private[ext] object ArtifactIO {
     // the floor binds only when the size target would compact BELOW the
     // requested scan parallelism; only then are footers consulted for the
     // row-aware term (driver-side metadata over the same bounded file
-    // set — at real scale sizeN >= the floor and no footer is opened)
+    // set — at real scale sizeN >= the floor and no footer is opened).
+    // The footers count the rows ON DISK: DedupIndex.compact calls this
+    // before its dropDuplicates, so a heavily re-appended index is sliced
+    // by its pre-dedup row count — over-sliced relative to the deduped
+    // output, bounded by the parallelismFloor cap
     val floorN =
       if (sizeN >= parallelismFloor) 1L
       else {

@@ -50,6 +50,9 @@ object Dedup {
   private[ext] def MaxBroadcastVerifyBytes: Long =
     math.min(1L << 31, Runtime.getRuntime.maxMemory() / 8)
 
+  /** Auto-mode row cutoff of every near-dup verifier's `broadcastVerify`. */
+  private[ext] val BroadcastVerifyMaxRows: Long = 1000000L
+
   private[ext] def autoBroadcastVerify(op: String, docCount: Long, maxRows: Long,
                                   estBytesPerRow: Long): Boolean = {
     val estBytes = docCount * estBytesPerRow
@@ -294,8 +297,35 @@ object Dedup {
       .drop("__id", "__spans")
   }
 
+  /** The (id, sorted distinct shingle hashes) table of a text column,
+    * empty documents dropped — unpinned; each caller pins it. */
+  private def shingleTable(df: DataFrame, idCol: String, textCol: String,
+                           shingleLen: Int): DataFrame =
+    df.select(col(idCol).as("id"),
+        shingleHashes(col(textCol), shingleLen).as("sh"))
+      .filter(size(col("sh")) > 0)
+
+  /** The unpinned (id, band, bsig) MinHash banding of a shingle table,
+    * shared by [[shingleBandedCounted]] and the [[oversizedBuckets]] audit
+    * so the audit cannot drift from the operator. Band signature = farm
+    * fingerprint of the band's slice: the bucket key is a single long.
+    * Band indices are a driver-side Int range, so each slice start is a
+    * literal — cheaper than a per-row sequence+transform. */
+  private def minhashBands(sh: DataFrame, numHashes: Int, bands: Int,
+                           seed: Int): DataFrame = {
+    val rPerB = numHashes / bands
+    val sig = sh.withColumn("sig", minhash(col("sh"), numHashes, seed))
+    val bandStructs = (0 until bands).map { b =>
+      struct(lit(b).as("band"),
+        farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
+    }
+    sig.select(col("id"), explode(array(bandStructs: _*)).as("bb"))
+      .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+  }
+
   /** The MinHash-LSH family's shared front half: (hashed-shingle table,
-    * banded-signature relation), both localCheckpoint-pinned.
+    * banded-signature relation, banded row count), both relations
+    * localCheckpoint-pinned.
     *
     * The whole pipeline runs on hashed shingles (sorted distinct longs) —
     * no string arrays anywhere: shingling is one custom-expression pass,
@@ -304,52 +334,153 @@ object Dedup {
     * path AND the verification sides, which would otherwise re-scan and
     * re-shingle the corpus per consumer.
     *
-    * Band signature = farm fingerprint of the band's slice, so the bucket
-    * key is a single long (cheap shuffle key). Band indices are a
-    * driver-side Int range, so each slice start is a literal — cheaper
-    * than a per-row sequence+transform and keeps slice() overloads happy.
     * The banded relation carries ONLY (id, band, bsig): the shingle
     * arrays are re-joined by id after pair dedup, so the ×bands explode
     * shuffle moves 3 scalars per row, never the document shingles; it is
     * pinned because every consumer reads it through several plan branches
     * (bucket counts + pair sides), each of which would re-shingle and
     * re-minhash the corpus otherwise — ~24 bytes/row × bands, negligible
-    * next to the corpus it replaces. */
-  private[ext] def shingleBanded(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, shingleLen: Int,
-      seed: Int): (DataFrame, DataFrame) = {
-    val (sh, banded, _) = shingleBandedCounted(df, idCol, textCol,
-      numHashes, bands, shingleLen, seed)
-    (sh, banded)
-  }
-
-  /** [[shingleBanded]] plus the banded relation's row count, which RIDES
-    * the eager checkpoint as an observed metric instead of paying its own
-    * scheduler round trip afterwards (guide §1.2-1: every consumer of
-    * this pair — bloom sizing, broadcast-verify sizing — needed that
-    * count and each re-counted the pinned relation as a separate job;
-    * measured 3 jobs → 1 for the pin+count pattern). Values are
-    * identical by construction: the metric is `count(*)` of exactly the
-    * rows the checkpoint materializes. */
+    * next to the corpus it replaces.
+    *
+    * The banded row count RIDES the eager checkpoint as an observed
+    * metric instead of paying its own scheduler round trip afterwards
+    * (guide §1.2-1: every consumer of this pair — bloom sizing,
+    * broadcast-verify sizing — needed that count and each re-counted the
+    * pinned relation as a separate job; measured 3 jobs → 1 for the
+    * pin+count pattern). Values are identical by construction: the metric
+    * is `count(*)` of exactly the rows the checkpoint materializes. */
   private[ext] def shingleBandedCounted(df: DataFrame, idCol: String,
       textCol: String, numHashes: Int, bands: Int, shingleLen: Int,
       seed: Int): (DataFrame, DataFrame, Long) = {
-    val rPerB = numHashes / bands
-    val sh = df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint(true)
-    val sig = sh.withColumn("sig", minhash(col("sh"), numHashes, seed))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
-    }
+    require(numHashes % bands == 0, "numHashes must be divisible by bands")
+    val sh = shingleTable(df, idCol, textCol, shingleLen).localCheckpoint(true)
     val obs = org.apache.spark.sql.Observation()
-    val banded = sig.select(col("id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+    val banded = minhashBands(sh, numHashes, bands, seed)
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     (sh, banded, obs.get("n").asInstanceOf[Long])
+  }
+
+  /** The bucket key of the MinHash banded relation. */
+  private[ext] val BandKeys: Seq[String] = Seq("band", "bsig")
+
+  /** (band, bsig) funneled to the long every band Bloom filter holds. */
+  private def bandKey: Column = fieldHash(Seq(col("band"), col("bsig")))
+
+  /** The Bloom filter over a banded relation's `n` band keys. */
+  private[ext] def bandBloom(banded: DataFrame, n: Long,
+                             fpp: Double): org.apache.spark.util.sketch.BloomFilter =
+    banded.select(bandKey.as("__bk")).stat.bloomFilter("__bk", n, fpp)
+
+  /** Bucket sizes `(keys…, count)` of a banded relation capped at
+    * `maxBucketSize`. Self-joins also drop singletons (no pair); a
+    * cross-side join keeps them: one existing doc is a match target. */
+  private[ext] def cappedBuckets(banded: DataFrame, keys: Seq[String],
+                                 maxBucketSize: Int,
+                                 keepSingletons: Boolean = false): DataFrame = {
+    val capped = col("count") <= maxBucketSize
+    banded.groupBy(keys.head, keys.tail: _*).count()
+      .filter(if (keepSingletons) capped else capped && col("count") > 1)
+  }
+
+  /** The banded joins' pre-flight guard on a candidate `estimate`: past
+    * `maxCandidates` fail with `advice`; past [[WarnCandidateVolume]] log
+    * `warnDetail` (the banding that produced the volume). */
+  private[ext] def guardCandidates(op: String, maxCandidates: Option[Long],
+                                   advice: String, warnDetail: String)
+                                  (estimate: Long): Unit = {
+    maxCandidates.foreach { cap =>
+      if (estimate > cap) throw new IllegalStateException(
+        s"$op: estimated candidate volume $estimate exceeds " +
+          s"maxCandidates=$cap. $advice")
+    }
+    if (estimate > WarnCandidateVolume)
+      System.err.println(s"[graft] $op: ~$estimate candidate pairs from $warnDetail")
+  }
+
+  /** The `warnDetail` of the MinHash banded joins. */
+  private[ext] def bandingDetail(numHashes: Int, bands: Int,
+                                 maxBucketSize: Int): String =
+    s"banding (numHashes=$numHashes, bands=$bands => r=${numHashes / bands}, " +
+      s"maxBucketSize=$maxBucketSize) — verification pays this volume; " +
+      "consider more rows per band"
+
+  /** The bucket self-join of the banded family: every `id_a < id_b` pair
+    * sharing a capped bucket, PRE-dedup, each `carry` column riding along
+    * as `<c>_a` / `<c>_b`. Priced first (the [[jaccardJoinExact]]
+    * discipline): Σ c·(c−1)/2 over the surviving buckets equals the
+    * join's output EXACTLY, one tiny aggregation over the pinned banded
+    * relation. High-recall banding on shared vocabulary goes quadratic in
+    * bucket sizes — measured 15.5M candidates from a 10k-doc corpus at
+    * r=2 where r=4 yields ~100k. */
+  private[ext] def selfPairs(banded: DataFrame, keys: Seq[String],
+                             maxBucketSize: Int, guard: Long => Unit,
+                             carry: Seq[String] = Nil): DataFrame = {
+    val buckets = cappedBuckets(banded, keys, maxBucketSize)
+    guard(bucketCandidateVolume(buckets))
+    def side(s: String) = banded.select(keys.map(col) ++
+      (col("id").as(s"id_$s") +: carry.map(c => col(c).as(s"${c}_$s"))): _*)
+    side("a").join(buckets, keys)
+      .join(side("b"), keys)
+      .filter(col("id_a") < col("id_b"))
+  }
+
+  /** The cross-side bucket join of the incremental MinHash forms: deduped
+    * (id_new, id_old) pairs between the incoming bands and the existing
+    * side's capped buckets, singletons included. The existing side's band
+    * `blooms` (empty: no pruning) prune the incoming bands before any
+    * shuffle; false positives only add candidates. Priced like
+    * [[selfPairs]]: Σ n_in(b)·n_ex(b) over the matched buckets equals the
+    * join's pre-dedup output exactly. */
+  private[ext] def crossPairs(bandedIn: DataFrame,
+      blooms: Array[org.apache.spark.util.sketch.BloomFilter],
+      bandedEx: DataFrame, maxBucketSize: Int,
+      guard: Long => Unit): DataFrame = {
+    val buckets = cappedBuckets(bandedEx, BandKeys, maxBucketSize,
+      keepSingletons = true)
+    val pruned =
+      if (blooms.isEmpty) bandedIn
+      else {
+        val bc = bandedIn.sparkSession.sparkContext.broadcast(blooms)
+        bandedIn.filter(udf { (k: Long) =>
+          bc.value.exists(_.mightContainLong(k)) }.apply(bandKey))
+      }
+    val survivors = pruned.select(col("band"), col("bsig"), col("id").as("id_new"))
+    guard(firstLong(survivors.groupBy("band", "bsig")
+      .agg(count(lit(1)).as("__nin"))
+      .join(buckets, BandKeys)
+      .agg(sum(col("__nin") * col("count")).cast("long"))))
+    survivors
+      .join(buckets, BandKeys)
+      .join(bandedEx.select(col("band"), col("bsig"), col("id").as("id_old")),
+        BandKeys)
+      .select(col("id_new"), col("id_old"))
+      .dropDuplicates("id_new", "id_old")
+  }
+
+  /** Exact shingle-Jaccard verify of `op`'s deduped pairs (id columns `a`,
+    * `b`) against the (id, sh) tables `shA`, `shB`, broadcast per
+    * `broadcastVerify` (`None`: [[autoBroadcastVerify]] on `docs` at
+    * ~2.5 KB/doc). J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|), so the size ratio
+    * drops hopeless pairs before the merge walk. Returns (a, b, jaccard). */
+  private[ext] def jaccardVerify(op: String, pairs: DataFrame,
+      a: String, shA: DataFrame, b: String, shB: DataFrame, threshold: Double,
+      broadcastVerify: Option[Boolean], docs: Long): DataFrame = {
+    val doBroadcast = broadcastVerify.getOrElse(autoBroadcastVerify(op, docs,
+      BroadcastVerifyMaxRows, estBytesPerRow = 2560L))
+    def side(sh: DataFrame, n: String) = {
+      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
+      if (doBroadcast) broadcast(s) else s
+    }
+    val (setA, setB) = (col(s"shh_$a"), col(s"shh_$b"))
+    pairs
+      .join(side(shA, a), a)
+      .join(side(shB, b), b)
+      .filter(least(size(setA), size(setB)) >=
+        lit(threshold) * greatest(size(setA), size(setB)))
+      .withColumn("jaccard", jaccardSorted(setA, setB))
+      .filter(col("jaccard") >= threshold)
+      .select(col(a), col(b), col("jaccard"))
   }
 
   /** MinHash-LSH near-duplicate pairs over a text column.
@@ -364,79 +495,29 @@ object Dedup {
     *        arrays attached — the pair relation stays 2 longs wide. The
     *        table is ~2.5 KB/doc, fine to broadcast up to ~1e6 docs but an
     *        executor OOM beyond; `None` (default) decides from the corpus
-    *        row count (broadcast iff ≤ `broadcastVerifyMaxRows`, measured on
-    *        the already-pinned banded relation, and logs the choice), so a
-    *        1e9-doc corpus falls back to the shuffle join automatically.
-    * @param broadcastVerifyMaxRows auto-mode cutoff for `broadcastVerify` */
+    *        row count (broadcast iff ≤ [[BroadcastVerifyMaxRows]], measured
+    *        on the already-pinned banded relation, and logs the choice), so
+    *        a 1e9-doc corpus falls back to the shuffle join automatically. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 5,
                       threshold: Double = 0.8, seed: Int = 0,
                       maxBucketSize: Int = 1000,
                       broadcastVerify: Option[Boolean] = None,
-                      broadcastVerifyMaxRows: Long = 1000000L,
                       maxCandidates: Option[Long] = DefaultMaxCandidates): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val (sh, banded, nBanded) = shingleBandedCounted(df, idCol, textCol,
       numHashes, bands, shingleLen, seed)
-
-    // candidate pairs within a bucket; cap pathological buckets
-    val bucketSizes = banded.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1)
-
-    // self-pricing (the jaccardJoinExact discipline, because the same
-    // quadratic lives here): Σ c·(c−1)/2 over surviving buckets equals
-    // the bucket join's pre-dedup candidate output EXACTLY. Few rows per
-    // band (e.g. numHashes=64, bands=32 → r=2) is high-recall banding,
-    // but on corpora with shared vocabulary a 2-hash signature collides
-    // broadly and candidates go quadratic in bucket sizes — measured
-    // 15.5M candidates from a 10k-doc corpus at r=2 where r=4 yields
-    // ~100k. One tiny aggregation over the already-pinned banded
-    // relation prices the run before it happens.
-    val estimate = bucketCandidateVolume(bucketSizes)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"minhashNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more rows per band (fewer bands for " +
-          s"the same numHashes — r=${numHashes / bands} here), a smaller " +
-          "maxBucketSize, or simhashNearDups.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] minhashNearDups: ~$estimate candidate " +
-        s"pairs from banding (numHashes=$numHashes, bands=$bands => r=" +
-        s"${numHashes / bands}, maxBucketSize=$maxBucketSize) — " +
-        "verification pays this volume; consider more rows per band")
-    val a = banded.select(col("band"), col("bsig"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("bsig"), col("id").as("id_b"))
-    val pairs = a.join(bucketSizes, Seq("band", "bsig"))
-      .join(b, Seq("band", "bsig"))
-      .filter(col("id_a") < col("id_b"))
+    val pairs = selfPairs(banded, BandKeys, maxBucketSize,
+        guardCandidates("minhashNearDups", maxCandidates,
+          s"Use more rows per band (fewer bands for the same numHashes — " +
+            s"r=${numHashes / bands} here), a smaller maxBucketSize, or " +
+            "simhashNearDups.",
+          bandingDetail(numHashes, bands, maxBucketSize)) _)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-
-    // verify with exact Jaccard over the sorted hashed shingle sets: a
-    // one-pass merge (JaccardSorted) instead of generic string-array
-    // intersect/union; the compact set table is re-joined per side
-    val doBroadcast = broadcastVerify.getOrElse {
-      // docs = banded rows / bands; the count rode the pin as an
-      // observed metric — no extra job, no corpus pass
-      // ~2.5 KB/doc hashed-shingle payload (documented above)
-      autoBroadcastVerify("minhashNearDups", nBanded / bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L)
-    }
-    def side(n: String) = {
-      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s) else s
-    }
-    pairs
-      .join(side("id_a"), "id_a")
-      .join(side("id_b"), "id_b")
-      // J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): candidates whose set sizes
-      // alone rule out the threshold never pay the merge walk
-      .filter(least(size(col("shh_id_a")), size(col("shh_id_b"))) >=
-        lit(threshold) * greatest(size(col("shh_id_a")), size(col("shh_id_b"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_a"), col("shh_id_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    // docs = banded rows / bands; the count rode the pin as an observed
+    // metric — no extra job, no corpus pass
+    jaccardVerify("minhashNearDups", pairs, "id_a", sh, "id_b", sh,
+      threshold, broadcastVerify, nBanded / bands)
   }
 
   /** Incremental NEAR-duplicate detection: (id_new, id_old, jaccard) pairs
@@ -446,7 +527,7 @@ object Dedup {
     * too strict. Anti-join `incoming` on `id_new` to keep the novel rows.
     *
     * Scale shape: both sides reduce to the shared hashed-shingle +
-    * banded-signature relations ([[shingleBanded]]); a Bloom filter over
+    * banded-signature relations ([[shingleBandedCounted]]); a Bloom filter over
     * the EXISTING side's band signatures (8-byte keys, `bloomFpp`, no
     * false negatives) broadcasts into the incoming side's scan, so an
     * incoming document none of whose bands hits the filter — the typical
@@ -464,7 +545,6 @@ object Dedup {
                         threshold: Double = 0.8, seed: Int = 0,
                         maxBucketSize: Int = 1000, bloomFpp: Double = 0.01,
                         broadcastVerify: Option[Boolean] = None,
-                        broadcastVerifyMaxRows: Long = 1000000L,
                         maxCandidates: Option[Long] = DefaultMaxCandidates): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     require(bloomFpp > 0 && bloomFpp <= 0.5,
@@ -506,73 +586,21 @@ object Dedup {
       return empty
     }
 
-    // (band, bsig) funneled to one long; the bloom broadcast prunes the
-    // incoming bands BEFORE any shuffle (false positives only add
-    // candidates — the exact verify restores precision). Both sizing
-    // counts rode their pins as observed metrics, so the bloom build is
-    // the only job left here.
-    val bandKey = fieldHash(Seq(col("band"), col("bsig")))
-    val bloom = bandedEx.select(bandKey.as("__bk"))
-      .stat.bloomFilter("__bk", nExBands, bloomFpp)
-    val bc = incoming.sparkSession.sparkContext.broadcast(bloom)
-    val mightContain = udf { (k: Long) => bc.value.mightContainLong(k) }
-
-    val buckets = bandedEx.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize)
-    val survivors = bandedIn.filter(mightContain(bandKey))
-      .select(col("band"), col("bsig"), col("id").as("id_new"))
-
-    // self-pricing, like [[minhashNearDups]]: Σ n_in(b)·n_ex(b) over the
-    // post-Bloom surviving buckets equals the cross join's pre-dedup
-    // output exactly — the number that explodes when an incoming crawl
-    // shares vocabulary with a large accumulated corpus under
-    // high-recall (few-rows-per-band) banding. One aggregation over the
-    // pinned band relations.
-    val estimate = survivors.groupBy("band", "bsig")
-      .agg(count(lit(1)).as("__nin"))
-      .join(buckets, Seq("band", "bsig"))
-      .agg(sum(col("__nin") * col("count")).cast("long"))
-      .first().get(0) match { case null => 0L; case l: Long => l }
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"minhashNewAgainst: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more rows per band (fewer bands for " +
-          s"the same numHashes — r=${numHashes / bands} here) or a " +
-          "smaller maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] minhashNewAgainst: ~$estimate candidate " +
-        s"pairs from banding (numHashes=$numHashes, bands=$bands => r=" +
-        s"${numHashes / bands}, maxBucketSize=$maxBucketSize) — " +
-        "verification pays this volume; consider more rows per band")
-
-    val pairs = survivors
-      .join(buckets, Seq("band", "bsig"))
-      .join(bandedEx.select(col("band"), col("bsig"), col("id").as("id_old")),
-        Seq("band", "bsig"))
-      .select(col("id_new"), col("id_old"))
-      .dropDuplicates("id_new", "id_old")
+    // both sizing counts rode their pins as observed metrics, so the
+    // bloom build is the only job before the pair pricing
+    val pairs = crossPairs(bandedIn,
+      Array(bandBloom(bandedEx, nExBands, bloomFpp)), bandedEx, maxBucketSize,
+      guardCandidates("minhashNewAgainst", maxCandidates,
+        s"Use more rows per band (fewer bands for the same numHashes — " +
+          s"r=${numHashes / bands} here) or a smaller maxBucketSize.",
+        bandingDetail(numHashes, bands, maxBucketSize)) _)
 
     // BOTH side tables broadcast under the hint, so the decision must
     // size on the LARGER side — a 50M-doc incoming crawl against a small
     // accumulated corpus must not get broadcast just because the existing
     // side is tiny (bandedIn is pinned; its count rode the bloom leg)
-    val doBroadcast = broadcastVerify.getOrElse(
-      autoBroadcastVerify("minhashNewAgainst",
-        math.max(nExBands, nInBands) / bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L))
-    def side(sh: DataFrame, n: String) = {
-      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s) else s
-    }
-    pairs
-      .join(side(shIn, "id_new"), "id_new")
-      .join(side(shEx, "id_old"), "id_old")
-      .filter(least(size(col("shh_id_new")), size(col("shh_id_old"))) >=
-        lit(threshold) * greatest(size(col("shh_id_new")), size(col("shh_id_old"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_new"), col("shh_id_old")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_old"), col("jaccard"))
+    jaccardVerify("minhashNewAgainst", pairs, "id_new", shIn, "id_old", shEx,
+      threshold, broadcastVerify, math.max(nExBands, nInBands) / bands)
   }
 
   /** Build the accumulated-corpus band-signature Bloom filter that
@@ -586,14 +614,12 @@ object Dedup {
                    numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 5,
                    seed: Int = 0, bloomFpp: Double = 0.01)
       : org.apache.spark.util.sketch.BloomFilter = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
     require(bloomFpp > 0 && bloomFpp <= 0.5,
       s"bloomFpp must be in (0, 0.5], got $bloomFpp")
     val (_, banded, n) = shingleBandedCounted(existing, idCol, textCol,
       numHashes, bands, shingleLen, seed)
-    if (n == 0) return org.apache.spark.util.sketch.BloomFilter.create(1, bloomFpp)
-    banded.select(fieldHash(Seq(col("band"), col("bsig"))).as("__bk"))
-      .stat.bloomFilter("__bk", n, bloomFpp)
+    if (n == 0) org.apache.spark.util.sketch.BloomFilter.create(1, bloomFpp)
+    else bandBloom(banded, n, bloomFpp)
   }
 
   /** Streaming-liftable "might be a near-duplicate of the corpus" flag
@@ -688,38 +714,23 @@ object Dedup {
                       maxCandidates: Option[Long] = DefaultMaxCandidates): DataFrame = {
     require(chunks > maxHamming, "need chunks > maxHamming for full recall (pigeonhole)")
     val chunked = simhashChunked(df, idCol, textCol, chunks, seed)
-
-    val a = chunked.select(col("chunk"), col("csig"), col("id").as("id_a"), col("fp").as("fp_a"))
-    val b = chunked.select(col("chunk"), col("csig"), col("id").as("id_b"), col("fp").as("fp_b"))
-    val buckets = chunked.groupBy("chunk", "csig").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1)
-    // self-pricing: Σ c·(c−1)/2 over surviving buckets equals the bucket
-    // join's pre-Hamming pre-dedup candidate output EXACTLY — one tiny
-    // aggregation over the already-pinned chunked relation. The Hamming
-    // filter is cheap per pair, but the JOIN still emits (and shuffles)
-    // this volume, so a recall-tuned chunking that collides broadly goes
-    // quadratic exactly like minhash's r=2 banding did.
-    val estimate = bucketCandidateVolume(buckets)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"simhashNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use fewer chunks (wider per-chunk " +
-          s"signatures collide less; keep chunks > maxHamming — " +
-          s"chunks=$chunks => ${64 / chunks} bits each here) or a smaller " +
-          "maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] simhashNearDups: ~$estimate candidate " +
-        s"pairs from chunk buckets (chunks=$chunks => ${64 / chunks} bits " +
-        s"per signature, maxBucketSize=$maxBucketSize) — the pair join " +
-        "emits this volume; consider fewer, wider chunks")
-    // Hamming-verify BEFORE the pair dedup: the fingerprints already ride
-    // the chunked relation, so the cheap bit_count filter collapses the
-    // candidate volume (e.g. 1.4M -> ~5k at sf0.1) before the distinct's
-    // shuffle, instead of deduplicating every raw bucket collision
-    a.join(buckets, Seq("chunk", "csig"))
-      .join(b, Seq("chunk", "csig"))
-      .filter(col("id_a") < col("id_b"))
+    // the Hamming filter is cheap per pair, but the JOIN still emits (and
+    // shuffles) the priced volume, so a recall-tuned chunking that
+    // collides broadly goes quadratic exactly like minhash's r=2 banding
+    // did. Hamming-verify BEFORE the pair dedup: the fingerprints already
+    // ride the chunked relation, so the cheap bit_count filter collapses
+    // the candidate volume (e.g. 1.4M -> ~5k at sf0.1) before the
+    // distinct's shuffle, instead of deduplicating every raw bucket
+    // collision
+    selfPairs(chunked, Seq("chunk", "csig"), maxBucketSize,
+        guardCandidates("simhashNearDups", maxCandidates,
+          s"Use fewer chunks (wider per-chunk signatures collide less; keep " +
+            s"chunks > maxHamming — chunks=$chunks => ${64 / chunks} bits " +
+            "each here) or a smaller maxBucketSize.",
+          s"chunk buckets (chunks=$chunks => ${64 / chunks} bits per " +
+            s"signature, maxBucketSize=$maxBucketSize) — the pair join emits " +
+            "this volume; consider fewer, wider chunks") _,
+        carry = Seq("fp"))
       .withColumn("hamming", hamming64(col("fp_a"), col("fp_b")))
       .filter(col("hamming") <= maxHamming)
       .dropDuplicates("id_a", "id_b")
@@ -733,48 +744,41 @@ object Dedup {
                        numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 5,
                        seed: Int = 0, maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rPerB = numHashes / bands
-    val sig = df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhash(col("sh"), numHashes, seed))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
-    }
-    sig.select(explode(array(bandStructs: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+    minhashBands(shingleTable(df, idCol, textCol, shingleLen),
+        numHashes, bands, seed)
       .groupBy("band", "bsig").count()
       .filter(col("count") > maxBucketSize)
+  }
+
+  /** The unpinned sign-LSH relation of [[embeddingNearDups]] and
+    * [[Similarity.lshTopK]]: one `(id, table, bucket)` row per row per
+    * table, `bucket` the sign pattern under `bits` Gaussian hyperplanes
+    * drawn driver-side from `seed + table` (shipped as literals). */
+  private[ext] def signTables(df: DataFrame, id: String, vec: String,
+                              dim: Int, bits: Int, tables: Int,
+                              seed: Long): DataFrame = {
+    val buckets = (0 until tables).map { t =>
+      val rnd = new java.util.Random(seed + t)
+      val planes = Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
+      struct(lit(t).as("table"), lshSignBits(col(vec), planes).as("bucket"))
+    }
+    df.select(col(id), explode(array(buckets: _*)).as("tb"))
+      .select(col(id), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
   }
 
   /** Shared front half of [[embeddingNearDups]] and
     * [[estimateEmbeddingCandidates]]: the pinned (id, table, bucket)
     * sign-LSH relation — pinned because bucket counts and both pair sides
     * would each re-project dim×bits×tables dot products per row
-    * otherwise. Splitting it out guarantees the estimator prices EXACTLY
-    * the relation the bucket join consumes. */
-  private[ext] def embeddingBanded(df: DataFrame, idCol: String,
-      vecCol: String, dim: Int, bits: Int, tables: Int,
-      seed: Long): DataFrame =
-    embeddingBandedCounted(df, idCol, vecCol, dim, bits, tables, seed)._1
-
-  /** [[embeddingBanded]] plus its row count riding the pin as an
-    * observed metric (the shingleBandedCounted pattern — no count job). */
+    * otherwise — plus its row count riding the pin as an observed metric
+    * (no count job). Splitting it out guarantees the estimator prices
+    * EXACTLY the relation the bucket join consumes. */
   private[ext] def embeddingBandedCounted(df: DataFrame, idCol: String,
       vecCol: String, dim: Int, bits: Int, tables: Int,
       seed: Long): (DataFrame, Long) = {
-    val planeSets = Array.tabulate(tables) { t =>
-      val rnd = new java.util.Random(seed + t)
-      Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-    }
-    val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val buckets = planeSets.zipWithIndex.map { case (planes, t) =>
-      struct(lit(t).as("table"), lshSignBits(col("v"), planes).as("bucket"))
-    }
     val obs = org.apache.spark.sql.Observation()
-    val banded = v.select(col("id"), explode(array(buckets.toIndexedSeq: _*)).as("tb"))
-      .select(col("id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
+    val banded = signTables(df.select(col(idCol).as("id"), col(vecCol).as("v")),
+        "id", "v", dim, bits, tables, seed)
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint(true)
     (banded, obs.get("n").asInstanceOf[Long])
@@ -792,7 +796,6 @@ object Dedup {
     *        memory (~dim×4 B/doc + overhead); `None` (default) decides from
     *        the corpus row count like [[minhashNearDups]] — at 1e9 vectors
     *        the verifier shuffle-joins instead of OOMing every executor.
-    * @param broadcastVerifyMaxRows auto-mode cutoff for `broadcastVerify`
     * @param maxCandidates fail-fast ceiling (default [[DefaultMaxCandidates]]) on the pre-flight
     *        bucket candidate estimate, like [[minhashNearDups]] — a
     *        recall-tuned low-`bits` table set on a clustered embedding
@@ -802,43 +805,26 @@ object Dedup {
                         tables: Int = 8, seed: Long = 42L,
                         maxBucketSize: Int = 100000,
                         broadcastVerify: Option[Boolean] = None,
-                        broadcastVerifyMaxRows: Long = 1000000L,
                         maxCandidates: Option[Long] = DefaultMaxCandidates): DataFrame = {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (banded, nBanded) =
       embeddingBandedCounted(df, idCol, vecCol, dim, bits, tables, seed)
-    val ok = banded.groupBy("table", "bucket").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1)
-    // self-pricing (the minhash/simhash discipline): Σ c·(c−1)/2 over
-    // surviving buckets equals the table-bucket join's pre-dedup
-    // candidate output exactly, from one aggregation over the pinned
-    // banded relation — the number that explodes when `bits` is too low
-    // for a clustered embedding space.
-    val estimate = bucketCandidateVolume(ok)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"embeddingNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more bits per table (smaller sign " +
-          s"buckets — bits=$bits here), fewer tables, or a smaller " +
-          "maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] embeddingNearDups: ~$estimate candidate " +
-        s"pairs from sign buckets (bits=$bits, tables=$tables, " +
-        s"maxBucketSize=$maxBucketSize) — exact-cosine verification pays " +
-        "this volume; consider more bits per table")
-    val a = banded.select(col("table"), col("bucket"), col("id").as("id_a"))
-    val b = banded.select(col("table"), col("bucket"), col("id").as("id_b"))
-    val pairs = a.join(ok, Seq("table", "bucket"))
-      .join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
+    // the priced volume explodes when `bits` is too low for a clustered
+    // embedding space
+    val pairs = selfPairs(banded, Seq("table", "bucket"), maxBucketSize,
+        guardCandidates("embeddingNearDups", maxCandidates,
+          s"Use more bits per table (smaller sign buckets — bits=$bits " +
+            "here), fewer tables, or a smaller maxBucketSize.",
+          s"sign buckets (bits=$bits, tables=$tables, " +
+            s"maxBucketSize=$maxBucketSize) — exact-cosine verification " +
+            "pays this volume; consider more bits per table") _)
       .select("id_a", "id_b")
       .dropDuplicates("id_a", "id_b")
     val doBroadcast = broadcastVerify.getOrElse(
       // docs = banded rows / tables; the count rode the pin as an
       // observed metric — no extra job, no corpus pass
       autoBroadcastVerify("embeddingNearDups", nBanded / tables,
-        broadcastVerifyMaxRows, estBytesPerRow = dim.toLong * 4 + 64))
+        BroadcastVerifyMaxRows, estBytesPerRow = dim.toLong * 4 + 64))
     def side(n: String, vn: String) = {
       val s = v.select(col("id").as(n), col("v").as(vn))
       if (doBroadcast) broadcast(s) else s
@@ -1118,34 +1104,32 @@ object Dedup {
     * representative's source keeps its row). */
   def dedupReportBy(df: DataFrame, idCol: String, components: DataFrame,
                     byCol: String): DataFrame = {
-    val labeled = df.select(col(idCol).as("__rid"), col(byCol))
-      .join(components.select(col("id").as("__rid"),
-        col("component").as("__rcomp")), Seq("__rid"), "left")
-      .withColumn("__rcomp", coalesce(col("__rcomp"), col("__rid")))
-    labeled.groupBy(byCol)
+    labelIds(df, idCol, components, keep = Seq(byCol)).groupBy(byCol)
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("__rid") === col("__rcomp"), 0L).otherwise(1L))
           .as("n_redundant"))
       .orderBy(byCol)
   }
 
-  /** (id → cluster label) for every corpus row: the `components` label
-    * where present, the row's own id for singletons. */
-  private def labelIds(df: DataFrame, idCol: String,
-                       components: DataFrame): DataFrame =
-    df.select(col(idCol).as("__rid"))
+  /** (id → cluster label) for every corpus row, plus its `keep` columns:
+    * the `components` label where present, the row's own id for
+    * singletons. */
+  private def labelIds(df: DataFrame, idCol: String, components: DataFrame,
+                       keep: Seq[String] = Nil): DataFrame =
+    df.select(col(idCol).as("__rid") +: keep.map(col): _*)
       .join(components.select(col("id").as("__rid"),
         col("component").as("__rcomp")), Seq("__rid"), "left")
       .withColumn("__rcomp", coalesce(col("__rcomp"), col("__rid")))
 
-  /** Log-warn threshold for [[jaccardJoinExact]]'s and
-    * [[minhashNearDups]]'s pre-flight candidate estimates (the hard stop
+  /** Log-warn threshold for [[jaccardJoinExact]]'s and the banded
+    * joins' ([[guardCandidates]]) pre-flight candidate estimates (the hard stop
     * is `maxCandidates`, protective by default — see
     * [[DefaultMaxCandidates]]). */
   val WarnCandidateVolume: Long = 10000000L
 
   /** Default `maxCandidates` fail-fast ceiling across the banded joins
-    * (minhash/simhash/embedding, their incremental forms, and
+    * (minhash/simhash/embedding, their incremental forms including the
+    * persisted-index search [[DedupIndex.minhashNewAgainst]], and
     * [[jaccardJoinExact]]): 1e9 candidate pairs — roughly half an hour
     * of verification on 32 cores, and far past any sane banding — so an
     * UNATTENDED run with default arguments stops at the pre-flight
@@ -1158,8 +1142,11 @@ object Dedup {
   /** Σ c·(c−1)/2 over a (band, bsig, count) bucket-size relation — the
     * EXACT pre-dedup candidate-pair output of the banded bucket join. */
   private def bucketCandidateVolume(bucketSizes: DataFrame): Long =
-    bucketSizes.agg(sum(col("count") * (col("count") - 1) / 2).cast("long"))
-      .first().get(0) match { case null => 0L; case l: Long => l }
+    firstLong(bucketSizes.agg(sum(col("count") * (col("count") - 1) / 2).cast("long")))
+
+  /** The single long of a one-row sum aggregate; null (no rows) is 0. */
+  private def firstLong(agg: DataFrame): Long =
+    agg.first().get(0) match { case null => 0L; case l: Long => l }
 
   /** Pre-flight price of a [[minhashNearDups]] run with these parameters:
     * the exact number of candidate pairs the banded bucket join will emit
@@ -1173,11 +1160,9 @@ object Dedup {
                                 numHashes: Int = 64, bands: Int = 16,
                                 shingleLen: Int = 5, seed: Int = 0,
                                 maxBucketSize: Int = 1000): Long = {
-    require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val (_, banded) = shingleBanded(df, idCol, textCol, numHashes, bands,
-      shingleLen, seed)
-    bucketCandidateVolume(banded.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1))
+    val (_, banded, _) = shingleBandedCounted(df, idCol, textCol, numHashes,
+      bands, shingleLen, seed)
+    bucketCandidateVolume(cappedBuckets(banded, BandKeys, maxBucketSize))
   }
 
   /** Pre-flight price of a [[simhashNearDups]] run with these parameters:
@@ -1189,10 +1174,9 @@ object Dedup {
                                 textCol: String, chunks: Int = 4,
                                 seed: Int = 0,
                                 maxBucketSize: Int = 1000): Long =
-    bucketCandidateVolume(
-      simhashChunked(df, idCol, textCol, chunks, seed)
-        .groupBy("chunk", "csig").count()
-        .filter(col("count") <= maxBucketSize && col("count") > 1))
+    bucketCandidateVolume(cappedBuckets(
+      simhashChunked(df, idCol, textCol, chunks, seed),
+      Seq("chunk", "csig"), maxBucketSize))
 
   /** Pre-flight price of an [[embeddingNearDups]] run with these
     * parameters: the exact number of candidate pairs the sign-bucket
@@ -1202,10 +1186,9 @@ object Dedup {
                                   vecCol: String, dim: Int, bits: Int = 8,
                                   tables: Int = 8, seed: Long = 42L,
                                   maxBucketSize: Int = 100000): Long =
-    bucketCandidateVolume(
-      embeddingBanded(df, idCol, vecCol, dim, bits, tables, seed)
-        .groupBy("table", "bucket").count()
-        .filter(col("count") <= maxBucketSize && col("count") > 1))
+    bucketCandidateVolume(cappedBuckets(
+      embeddingBandedCounted(df, idCol, vecCol, dim, bits, tables, seed)._1,
+      Seq("table", "bucket"), maxBucketSize))
 
   /** Shared front half of [[jaccardJoinExact]] and
     * [[estimateJaccardJoinCandidates]]: the pinned (id, sorted shingle
@@ -1217,9 +1200,7 @@ object Dedup {
       : (DataFrame, DataFrame, Long) = {
     // the broadcast-sizing doc count rides the pin as an observed metric
     val shObs = org.apache.spark.sql.Observation()
-    val sh = df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val sh = shingleTable(df, idCol, textCol, shingleLen)
       .observe(shObs, count(lit(1)).as("n"))
       .localCheckpoint(true) // feeds the freq pass, the prefix pass, and both verify sides
     val toks = sh.select(col("id"), explode(col("sh")).as("tok"))
@@ -1344,7 +1325,6 @@ object Dedup {
                        shingleLen: Int = 5,
                        threshold: Double = 0.8,
                        broadcastVerify: Option[Boolean] = None,
-                       broadcastVerifyMaxRows: Long = 1000000L,
                        maxCandidates: Long = DefaultMaxCandidates.get): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"threshold must be in (0, 1], got $threshold")
@@ -1400,7 +1380,7 @@ object Dedup {
     val doBroadcast = broadcastVerify.getOrElse {
       // the doc count rode the sh pin as an observed metric — no count job
       autoBroadcastVerify("jaccardJoinExact", nDocs,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L)
+        BroadcastVerifyMaxRows, estBytesPerRow = 2560L)
     }
     def vside(n: String) = {
       val s0 = sh.select(col("id").as(s"id_$n"), col("sh").as(s"sh_$n"))

@@ -247,8 +247,7 @@ object DedupIndex {
         fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
         if (nBands > 0)
           writeBloomSegment(spark, tmp,
-            banded.select(fieldHash(Seq(col("band"), col("bsig"))).as("__bk"))
-              .stat.bloomFilter("__bk", nBands, p.bloomFpp), cid)
+            Dedup.bandBloom(banded, nBands, p.bloomFpp), cid)
       }
     })
     val (nDocs, _) = graft.core.Par.settle2(fpLeg, bandLeg)
@@ -355,9 +354,7 @@ object DedupIndex {
       ArtifactIO.fenceOrAbort(spark, path)
       // bloom sizing: nBands rode the banded pin as an observed metric
       if (nBands > 0) {
-        val bloom = banded
-          .select(fieldHash(Seq(col("band"), col("bsig"))).as("__bk"))
-          .stat.bloomFilter("__bk", nBands, p.bloomFpp)
+        val bloom = Dedup.bandBloom(banded, nBands, p.bloomFpp)
         ArtifactIO.fenceOrAbort(spark, path)
         writeBloomSegment(spark, s"$path/$BandBloomDir", bloom, batch)
       }
@@ -407,12 +404,16 @@ object DedupIndex {
     * band relations are READ, not re-derived: the indexed corpus text is
     * never touched. Incoming is shingled+banded with the artifact's own
     * parameters; `threshold` must sit at or above the recall envelope of
-    * the artifact's (bands, rows-per-band) choice. */
+    * the artifact's (bands, rows-per-band) choice. Like every banded
+    * join, the candidate volume is priced before the pair join runs and
+    * past `maxCandidates` (default [[Dedup.DefaultMaxCandidates]]) the
+    * search fails with the estimate. */
   def minhashNewAgainst(spark: SparkSession, path: String,
                         incoming: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.8, maxBucketSize: Int = 1000,
                         broadcastVerify: Option[Boolean] = None,
-                        broadcastVerifyMaxRows: Long = 1000000L): DataFrame = {
+                        maxCandidates: Option[Long] = Dedup.DefaultMaxCandidates)
+      : DataFrame = {
     val p = readParams(spark, path)
     val bandedEx = spark.read.parquet(s"$path/bands")
     val shEx = spark.read.parquet(s"$path/shingles")
@@ -432,44 +433,18 @@ object DedupIndex {
         (loadBloomSegments(spark, s"$path/$BandBloomDir"),
           ArtifactIO.parquetRowCount(spark, s"$path/bands"))
       }
-    val bandKey = fieldHash(Seq(col("band"), col("bsig")))
-    val prunedIn =
-      if (blooms.isEmpty) bandedIn
-      else {
-        val bc = spark.sparkContext.broadcast(blooms)
-        val might = udf { (k: Long) => bc.value.exists(_.mightContainLong(k)) }
-        bandedIn.filter(might(bandKey))
-      }
-
-    val buckets = bandedEx.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize)
-    val pairs = prunedIn
-      .select(col("band"), col("bsig"), col("id").as("id_new"))
-      .join(buckets, Seq("band", "bsig"))
-      .join(bandedEx.select(col("band"), col("bsig"), col("id").as("id_old")),
-        Seq("band", "bsig"))
-      .select(col("id_new"), col("id_old"))
-      .dropDuplicates("id_new", "id_old")
+    val pairs = Dedup.crossPairs(bandedIn, blooms, bandedEx, maxBucketSize,
+      Dedup.guardCandidates("DedupIndex.minhashNewAgainst", maxCandidates,
+        "Rebuild the index with more rows per band (r=" +
+          s"${p.numHashes / p.bands} here) or use a smaller maxBucketSize.",
+        Dedup.bandingDetail(p.numHashes, p.bands, maxBucketSize)) _)
 
     // size on the LARGER side, as the direct operator does (both side
     // tables ride the same broadcast hint); both counts rode the
     // overlapped legs above
-    val doBroadcast = broadcastVerify.getOrElse(
-      Dedup.autoBroadcastVerify("DedupIndex.minhashNewAgainst",
-        math.max(nExBands, nInBands) / p.bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L))
-    def side(sh: DataFrame, n: String) = {
-      val s0 = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s0) else s0
-    }
-    pairs
-      .join(side(shIn, "id_new"), "id_new")
-      .join(side(shEx, "id_old"), "id_old")
-      .filter(least(size(col("shh_id_new")), size(col("shh_id_old"))) >=
-        lit(threshold) * greatest(size(col("shh_id_new")), size(col("shh_id_old"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_new"), col("shh_id_old")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_old"), col("jaccard"))
+    Dedup.jaccardVerify("DedupIndex.minhashNewAgainst", pairs, "id_new", shIn,
+      "id_old", shEx, threshold, broadcastVerify,
+      math.max(nExBands, nInBands) / p.bands)
   }
 
   /** The streaming-liftable EXACT-duplicate flag served from the

@@ -83,19 +83,6 @@ object Similarity {
     topKPerQuery(scored, k)
   }
 
-  /** Deterministic pseudo-random unit-ish hyperplanes from a seed. */
-  private def hyperplanes(dim: Int, bits: Int, seed: Long): Array[Array[Double]] = {
-    val rnd = new java.util.Random(seed)
-    Array.fill(bits)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Sign-pattern bucket id of a vector under `bits` hyperplanes: ONE
-    * custom-expression pass over the vector for all bits (the previous
-    * aggregate(zip_with(...))-per-bit tree traversed the array `bits`
-    * times per table per row). */
-  private def signBits(vec: Column, planes: Array[Array[Double]]): Column =
-    lshSignBits(vec, planes)
-
   /** LSH ANN: `tables` independent sign-hash tables of `bits` bits each.
     * Candidates = corpus vectors sharing a bucket with the query in any
     * table; exact cosine re-rank keeps top-k. Recall grows with tables,
@@ -103,34 +90,25 @@ object Similarity {
   def lshTopK(corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
               k: Int, dim: Int, bits: Int = 12, tables: Int = 4,
               seed: Long = 42L, maxBucketSize: Int = 100000): DataFrame = {
-    val planeSets = Array.tabulate(tables)(t => hyperplanes(dim, bits, seed + t))
-
-    // bucket the IDS only: the exploded ×tables relation and the candidate
-    // dedup shuffle stay 3 scalars wide — vectors are re-joined by id after
-    // the candidate set is down to distinct (query, id) pairs
-    def bucketed(df: DataFrame, id: String, v: String): DataFrame = {
-      val buckets = planeSets.zipWithIndex.map { case (planes, t) =>
-        struct(lit(t).as("table"), signBits(col(v), planes).as("bucket"))
-      }
-      df.select(col(id), explode(array(buckets.toIndexedSeq: _*)).as("tb"))
-        .select(col(id), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
-    }
-
     val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val queryV = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    // pinned: bucket counts + the candidate join would otherwise both
-    // recompute dim×bits×tables dot products per corpus row. Eager
+    // bucket the IDS only: the exploded ×tables relation and the candidate
+    // dedup shuffle stay 3 scalars wide — vectors are re-joined by id after
+    // the candidate set is down to distinct (query, id) pairs. The corpus
+    // side is pinned: bucket counts + the candidate join would otherwise
+    // both recompute dim×bits×tables dot products per corpus row. Eager
     // localCheckpoint, not persist: blocks are GC-reclaimed with the
     // DataFrame instead of accumulating in the plan-keyed cache (see
     // Dedup's cache-lifecycle note)
-    val cb = bucketed(corpusV, "id", "v").localCheckpoint(true)
-    val qb = bucketed(queryV, "query_id", "qv")
+    val cb = Dedup.signTables(corpusV, "id", "v", dim, bits, tables, seed)
+      .localCheckpoint(true)
+    val qb = Dedup.signTables(queryV, "query_id", "qv", dim, bits, tables, seed)
 
     // cap hot buckets (e.g. zero/degenerate vectors all land in one sign
     // pattern): a bucket larger than maxBucketSize would fan out unbounded
     // against every query sharing it — same guard as Dedup.maxBucketSize
-    val okBuckets = cb.groupBy("table", "bucket").count()
-      .filter(col("count") <= maxBucketSize).drop("count")
+    val okBuckets = Dedup.cappedBuckets(cb, Seq("table", "bucket"),
+      maxBucketSize, keepSingletons = true).drop("count")
 
     val cand = cb.join(broadcast(okBuckets), Seq("table", "bucket"))
       .join(broadcast(qb), Seq("table", "bucket"))

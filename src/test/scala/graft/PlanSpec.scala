@@ -101,20 +101,7 @@ class PlanSpec extends SparkSpec {
     plan(df) should not include "InMemoryTableScan"
   }
 
-  "the diff join pipeline" should "shuffle each side exactly once" in {
-    val o = spark.read.parquet(s"$sf/orders.parquet")
-    val r = diffy.BigDiffy.diff(
-      o.filter(col("o_orderkey") % 3 =!= 0),
-      o.filter(col("o_orderkey") % 5 =!= 0), Seq("o_orderkey"),
-      enforceUniqueKeys = false)
-    try {
-      // before the cache fills, keyStats' plan exposes the join pipeline:
-      // one hash exchange per side, nothing else
-      "Exchange hashpartitioning".r.findAllIn(plan(r.keyStats)).size shouldBe 2
-    } finally r.unpersist()
-  }
-
-  it should "fold the dup-key guard into the same two exchanges" in {
+  "the diff join pipeline" should "fold the dup-key guard into the same two exchanges" in {
     // uniqueness enforcement must NOT add a job or an exchange: each side's
     // count-per-key aggregate shares the join's hash partitioning
     val o = spark.read.parquet(s"$sf/orders.parquet")

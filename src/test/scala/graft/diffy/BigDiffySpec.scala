@@ -58,7 +58,7 @@ class BigDiffySpec extends SparkSpec {
     clean.getAs[Double]("variance") shouldBe 0.0
   }
 
-  it should "fail on duplicate keys by default and allow opt-out" in {
+  it should "fail on duplicate keys" in {
     val dup = Seq((1L, 1.0), (1L, 2.0)).toDF("k", "v")
     val ok = Seq((1L, 1.0)).toDF("k", "v")
     // the guard rides inside the join pass (no extra job), so the failure
@@ -67,8 +67,6 @@ class BigDiffySpec extends SparkSpec {
       BigDiffy.diff(dup, ok, Seq("k")).globalStats.head()
     e.getMessage should include("keys must be unique per side")
     e.getMessage should include("lhs: key '1' appears 2 times")
-    noException should be thrownBy
-      BigDiffy.diff(dup, ok, Seq("k"), enforceUniqueKeys = false).globalStats.head()
   }
 
   it should "join multi-keys with _ and render null keys as 'null'" in {

@@ -66,6 +66,31 @@ class DedupIndexSpec extends SparkSpec {
     sp.exists(_._1 >= 3000L) shouldBe false
   }
 
+  it should "price its candidate volume and fail fast past maxCandidates" in {
+    val path = tmpDir()
+    DedupIndex.build(corpus, "doc_id", "text", path, numHashes = 64, bands = 32)
+    // Σ n_in·n_ex over the shared (band, bsig) buckets: bloom pruning only
+    // drops incoming bands with no existing bucket, which add nothing
+    val (_, exBands, _) = Dedup.shingleBandedCounted(corpus, "doc_id", "text",
+      64, 32, 5, 0)
+    val (_, inBands, _) = Dedup.shingleBandedCounted(incoming, "doc_id", "text",
+      64, 32, 5, 0)
+    val est = inBands.groupBy("band", "bsig").count()
+      .withColumnRenamed("count", "n_in")
+      .join(exBands.groupBy("band", "bsig").count(), Seq("band", "bsig"))
+      .agg(sum(col("n_in") * col("count"))).as[Long].head()
+    est should be > 0L
+    val e = the[IllegalStateException] thrownBy
+      DedupIndex.minhashNewAgainst(spark, path, incoming, "doc_id", "text",
+        threshold = 0.5, maxCandidates = Some(est - 1))
+    e.getMessage should include(s"estimated candidate volume $est exceeds")
+    // at the estimate the search runs, pair-for-pair as uncapped
+    pairSet(DedupIndex.minhashNewAgainst(spark, path, incoming, "doc_id",
+      "text", threshold = 0.5, maxCandidates = Some(est))) shouldBe
+      pairSet(DedupIndex.minhashNewAgainst(spark, path, incoming, "doc_id",
+        "text", threshold = 0.5, maxCandidates = None))
+  }
+
   it should "produce identical searches from append and from rebuild" in {
     val a = corpus.filter(col("doc_id") < 30)
     val b = corpus.filter(col("doc_id") >= 30)

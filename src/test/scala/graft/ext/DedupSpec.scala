@@ -142,13 +142,14 @@ class DedupSpec extends SparkSpec {
     // The compiler-generated default getters pin the wiring — a
     // regression of any signature back to None breaks here.
     Dedup.DefaultMaxCandidates shouldBe Some(1000000000L)
-    Dedup.minhashNearDups$default$12 shouldBe Dedup.DefaultMaxCandidates
-    Dedup.minhashNewAgainst$default$14 shouldBe Dedup.DefaultMaxCandidates
+    Dedup.minhashNearDups$default$11 shouldBe Dedup.DefaultMaxCandidates
+    Dedup.minhashNewAgainst$default$13 shouldBe Dedup.DefaultMaxCandidates
     Dedup.simhashNearDups$default$8 shouldBe Dedup.DefaultMaxCandidates
-    Dedup.embeddingNearDups$default$12 shouldBe Dedup.DefaultMaxCandidates
+    Dedup.embeddingNearDups$default$11 shouldBe Dedup.DefaultMaxCandidates
     Dedup.clusterNearDups$default$11 shouldBe Dedup.DefaultMaxCandidates
-    Dedup.jaccardJoinExact$default$8 shouldBe Dedup.DefaultMaxCandidates.get
+    Dedup.jaccardJoinExact$default$7 shouldBe Dedup.DefaultMaxCandidates.get
     Split.leakageSafeSplit$default$14 shouldBe Dedup.DefaultMaxCandidates
+    DedupIndex.minhashNewAgainst$default$9 shouldBe Dedup.DefaultMaxCandidates
     // and None still opts out: the same over-cap corpus that fails fast
     // under an explicit tiny cap runs uncapped
     val est = Dedup.estimateMinhashCandidates(corpus, "doc_id", "text",
@@ -175,6 +176,40 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashNearDups(same, "doc_id", "text", maxBucketSize = 10).count() shouldBe 0L
     Dedup.oversizedBuckets(same, "doc_id", "text", maxBucketSize = 10)
       .count() should be > 0L
+  }
+
+  it should "audit exactly the buckets the operator drops (oversizedBuckets parity)" in {
+    // 12 identical docs form one over-cap bucket per band; the 60-doc
+    // corpus around them keeps ordinary (singleton and near-dup) buckets
+    val boiler = (5000L until 5012L)
+      .map(i => (i, "the same boilerplate footer text on every page"))
+      .toDF("doc_id", "text")
+    val mixed = corpus.unionByName(boiler)
+    val (numHashes, bands, cap) = (64, 32, 10)
+    val (_, banded, _) = Dedup.shingleBandedCounted(mixed, "doc_id", "text",
+      numHashes, bands, 5, 0)
+    def keySet(df: org.apache.spark.sql.DataFrame) =
+      df.select("band", "bsig").distinct().as[(Int, Long)].collect().toSet
+    // every multi-doc bucket of the pinned relation is either audited as
+    // oversized or kept by the operator's bucket cap — never both
+    val multi = keySet(banded.groupBy("band", "bsig").count()
+      .filter(col("count") > 1))
+    val dropped = keySet(Dedup.oversizedBuckets(mixed, "doc_id", "text",
+      numHashes = numHashes, bands = bands, maxBucketSize = cap))
+    val kept = keySet(Dedup.cappedBuckets(banded, Dedup.BandKeys, cap))
+    (dropped intersect kept) shouldBe empty
+    (dropped union kept) shouldBe multi
+    // the boilerplate's bucket in every band is among the dropped ones
+    val boilerBuckets = keySet(banded.filter(col("id") >= 5000L))
+    boilerBuckets should have size bands.toLong
+    boilerBuckets.subsetOf(dropped) shouldBe true
+    // and the operator pairs nothing from them, while the planted
+    // near-dups still pair
+    val pairs = Dedup.minhashNearDups(mixed, "doc_id", "text",
+      numHashes = numHashes, bands = bands, threshold = 0.5,
+      maxBucketSize = cap)
+    pairs.filter(col("id_a") >= 5000L).count() shouldBe 0L
+    pairs.filter(col("id_b") === col("id_a") + 1000).count() shouldBe 10L
   }
 
   behavior of "keepBest"
@@ -576,7 +611,7 @@ class EmbeddingDedupSpec extends graft.SparkSpec {
     val est = Dedup.estimateEmbeddingCandidates(df, "id", "emb", dim,
       bits = 4, tables = 12)
     val joined = {
-      val banded = Dedup.embeddingBanded(df, "id", "emb", dim, 4, 12, 42L)
+      val banded = Dedup.embeddingBandedCounted(df, "id", "emb", dim, 4, 12, 42L)._1
       val sizes = banded.groupBy("table", "bucket").count()
         .filter(col("count") <= 100000 && col("count") > 1)
       val a = banded.select(col("table"), col("bucket"), col("id").as("id_a"))
